@@ -213,5 +213,3 @@ AGG_BUILDERS: dict[str, Callable[[dict, Column, RegFn], DecideFn]] = {
     "expect_table_row_count_to_be_between": _build_row_count_between,
     "expect_table_row_count_to_equal": _build_row_count_equal,
 }
-
-AGG_EXPECTATION_TYPES = frozenset(AGG_BUILDERS)

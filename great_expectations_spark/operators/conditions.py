@@ -1043,7 +1043,9 @@ def is_map_expectation(expectation_type: str) -> bool:
 def register_map_expectation(
     expectation_type: str, builder: Callable[[dict], MapCondition]
 ) -> None:
-    """Extension point (image expectations etc. plug in here)."""
+    """Extension point (image expectations etc. plug in here). The planner's
+    dispatch table copies this registry when ``plans.planner`` is imported,
+    so register from a module the planner imports (as operators.images)."""
     _MAP_BUILDERS[expectation_type] = builder
 
 

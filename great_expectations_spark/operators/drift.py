@@ -149,9 +149,7 @@ def _observed_counts_or_exact(
     falls back to the exact bounded aggregate, lumping the out-of-partition
     tail under _LUMPED_TAIL and reporting the lump in details instead of
     silently computing on a clipped table."""
-    from great_expectations_spark.plans.planner import _partition_top_or_global
-
-    top, truncated, nn_total = _partition_top_or_global(ctx, gb)
+    top, truncated, nn_total = ctx.partition_top(gb)
     if not truncated:
         counts = {vals[0]: cnt for vals, cnt in top}
         return counts, nn_total or sum(counts.values()), None
@@ -297,8 +295,6 @@ def continuous_kl_weights(
 
 
 def _compile_kl(planner: Any, cfg: ExpectationConfiguration) -> None:
-    from great_expectations_spark.plans.planner import _Item
-
     kw = cfg.kwargs
     column = kw["column"]
     po = kw.get("partition_object")
@@ -372,7 +368,7 @@ def _compile_kl(planner: Any, cfg: ExpectationConfiguration) -> None:
                 "details": details,
             }
 
-        planner._items.append(_Item(cfg, decide, partition_capable=True))
+        planner._add_item(cfg, decide, partition_capable=True)
         return
 
     if bucketize is False:
@@ -411,7 +407,7 @@ def _compile_kl(planner: Any, cfg: ExpectationConfiguration) -> None:
             },
         }
 
-    planner._items.append(_Item(cfg, decide, partition_capable=True))
+    planner._add_item(cfg, decide, partition_capable=True)
 
 
 def _fracs(counts: list[int]) -> list[float]:
@@ -420,8 +416,6 @@ def _fracs(counts: list[int]) -> list[float]:
 
 
 def _compile_chi_square(planner: Any, cfg: ExpectationConfiguration) -> None:
-    from great_expectations_spark.plans.planner import _Item
-
     kw = cfg.kwargs
     column = kw["column"]
     po = kw["partition_object"]
@@ -456,12 +450,10 @@ def _compile_chi_square(planner: Any, cfg: ExpectationConfiguration) -> None:
             "details": details,
         }
 
-    planner._items.append(_Item(cfg, decide, partition_capable=True))
+    planner._add_item(cfg, decide, partition_capable=True)
 
 
 def _compile_ks(planner: Any, cfg: ExpectationConfiguration) -> None:
-    from great_expectations_spark.plans.planner import _Item
-
     kw = cfg.kwargs
     column = kw["column"]
     po = kw["partition_object"]
@@ -485,7 +477,7 @@ def _compile_ks(planner: Any, cfg: ExpectationConfiguration) -> None:
             "details": {"ks_statistic": d, "method": method},
         }
 
-    planner._items.append(_Item(cfg, decide, partition_capable=True))
+    planner._add_item(cfg, decide, partition_capable=True)
 
 
 def _compile_bootstrapped_ks(planner: Any, cfg: ExpectationConfiguration) -> None:
@@ -505,8 +497,6 @@ def _compile_bootstrapped_ks(planner: Any, cfg: ExpectationConfiguration) -> Non
     approximation is badly biased at n≈10, which is what made the previous
     sketch alias diverge from the reference's golden cases."""
     import numpy as np
-
-    from great_expectations_spark.plans.planner import _Item
 
     kw = cfg.kwargs
     column = kw["column"]
@@ -654,12 +644,10 @@ def _compile_bootstrapped_ks(planner: Any, cfg: ExpectationConfiguration) -> Non
             },
         }
 
-    planner._items.append(_Item(cfg, decide, partition_capable=True))
+    planner._add_item(cfg, decide, partition_capable=True)
 
 
 def _compile_psi(planner: Any, cfg: ExpectationConfiguration) -> None:
-    from great_expectations_spark.plans.planner import _Item
-
     kw = cfg.kwargs
     column = kw["column"]
     po = kw["partition_object"]
@@ -695,7 +683,7 @@ def _compile_psi(planner: Any, cfg: ExpectationConfiguration) -> None:
                 result["details"] = trunc
             return bool(v < threshold), result
 
-        planner._items.append(_Item(cfg, decide, partition_capable=True))
+        planner._add_item(cfg, decide, partition_capable=True)
         return
 
     bins = [float(b) for b in po["bins"]]
@@ -711,7 +699,7 @@ def _compile_psi(planner: Any, cfg: ExpectationConfiguration) -> None:
         v = psi(obs, exp)
         return bool(v < threshold), {"observed_value": v}
 
-    planner._items.append(_Item(cfg, decide, partition_capable=True))
+    planner._add_item(cfg, decide, partition_capable=True)
 
 
 _CT_DROP = "(dropped)"  # below-first-explicit-edge sentinel, excluded from
@@ -892,7 +880,6 @@ def _compile_cramers_phi(planner: Any, cfg: ExpectationConfiguration) -> None:
     phi is bounded driver math; the DISTINCT_CAP fallback rebins in-cluster
     through literal CASE chains instead (replays the corpus's 8 golden
     cases exactly, including the three binned/missing ones)."""
-    from great_expectations_spark.plans.planner import _Item
     from pyspark.sql.types import NumericType
 
     kw = cfg.kwargs
@@ -909,10 +896,8 @@ def _compile_cramers_phi(planner: Any, cfg: ExpectationConfiguration) -> None:
     )
 
     def decide(ctx) -> tuple[bool, dict]:
-        from great_expectations_spark.plans.planner import _partition_top_or_global
-
         gb = ctx.groupby[key]
-        top, truncated, _ = _partition_top_or_global(ctx, gb)
+        top, truncated, _ = ctx.partition_top(gb)
         if truncated:
             base = (
                 _partition_filtered(planner, ctx)
@@ -959,7 +944,7 @@ def _compile_cramers_phi(planner: Any, cfg: ExpectationConfiguration) -> None:
             "details": {"chi_squared": chi2, "n_rows": rows, "n_cols": cols},
         }
 
-    planner._items.append(_Item(cfg, decide, partition_capable=True))
+    planner._add_item(cfg, decide, partition_capable=True)
 
 
 def _compile_parameterized_ks(planner: Any, cfg: ExpectationConfiguration) -> None:
@@ -969,8 +954,6 @@ def _compile_parameterized_ks(planner: Any, cfg: ExpectationConfiguration) -> No
     Pandas-only in the reference (sample-based scipy.stats.kstest); the scale
     path here evaluates |F_dist(x_p) − p| at K approximate sample quantiles
     from the bundled agg pass (GK sketch — single pass, mergeable)."""
-    from great_expectations_spark.plans.planner import _Item
-
     kw = cfg.kwargs
     column = kw["column"]
     p_threshold = float(kw.get("p_value", kw.get("p", 0.05)))
@@ -999,7 +982,7 @@ def _compile_parameterized_ks(planner: Any, cfg: ExpectationConfiguration) -> No
             "details": {"ks_statistic": d, "n_quantile_probes": n_probe},
         }
 
-    planner._items.append(_Item(cfg, decide, partition_capable=True))
+    planner._add_item(cfg, decide, partition_capable=True)
 
 
 DRIFT_COMPILERS: dict[str, Callable[[Any, ExpectationConfiguration], None]] = {

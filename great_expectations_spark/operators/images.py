@@ -34,11 +34,11 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from great_expectations_spark.functions.image_codec import decode_image, phash64
 from great_expectations_spark.operators.conditions import (
     MapCondition,
     register_map_expectation,
 )
-from great_expectations_spark.testing.images import decode_image, phash64
 
 DECODED_COL = "_decoded"
 

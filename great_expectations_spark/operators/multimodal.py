@@ -24,6 +24,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from great_expectations_spark.functions.image_codec import encode_image, phash64
+
 AUDIO_MAGIC = b"FAUD"
 VIDEO_MAGIC = b"FVID"
 _AUDIO_HEADER = struct.Struct("<4sII")
@@ -192,8 +194,6 @@ VIDEO_FEATURES_SCHEMA = T.StructType(
 @F.pandas_udf(VIDEO_FEATURES_SCHEMA)
 def video_features_udf(batches: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
     """Decode + per-frame perceptual hashes (reuses the image phash kernel)."""
-    from great_expectations_spark.testing.images import phash64
-
     for series in batches:
         rows = []
         for data in series:
@@ -224,10 +224,8 @@ def sample_frames(
     df: DataFrame, every_n: int = 2, bytes_col: str = "bytes", id_col: str = "video_id"
 ) -> DataFrame:
     """Frame sampling: one output row per kept frame, frame re-encoded as a
-    single-frame image payload (testing/images codec) — the training-data
+    single-frame image payload (functions/image_codec) — the training-data
     shape for image models fed from video."""
-    from great_expectations_spark.testing.images import encode_image
-
     if not isinstance(every_n, int) or every_n < 1:
         # range(..., 0) raises ValueError inside the executor with an
         # opaque traceback; validate at the API surface instead

@@ -154,5 +154,3 @@ SCHEMA_CHECKS: dict[str, Callable[[DataFrame, dict], tuple[bool, dict]]] = {
     "expect_table_column_count_to_be_between": check_column_count_between,
     "expect_table_column_count_to_equal": check_column_count_equal,
 }
-
-SCHEMA_EXPECTATION_TYPES = frozenset(SCHEMA_CHECKS)

@@ -41,8 +41,6 @@ def _compile_exist_in(planner: Any, cfg: ExpectationConfiguration) -> None:
     unexpected rows = df ⟕̸ ref on (column == ref_column); violation rows are
     exactly the anti-join output (no window, no collect of the ref side).
     """
-    from great_expectations_spark.plans.planner import _Item
-
     kw = cfg.kwargs
     columns = [kw["column"]] if "column" in kw else list(kw["column_list"])
     ref_columns = (
@@ -125,7 +123,7 @@ def _compile_exist_in(planner: Any, cfg: ExpectationConfiguration) -> None:
         )
         return bool(success), out.get("result", {"success": success})
 
-    planner._items.append(_Item(cfg, decide, partition_capable=True))
+    planner._add_item(cfg, decide, partition_capable=True)
 
 
 def _all_not_null(cols: list[Column]) -> Column:
@@ -253,8 +251,6 @@ def _compile_monotonic(planner: Any, cfg: ExpectationConfiguration, increasing: 
     is distributed: see ``_monotonic_scan`` (range partitioning + vectorized
     per-partition lag + driver-side boundary exchange).
     """
-    from great_expectations_spark.plans.planner import _Item
-
     kw = cfg.kwargs
     column = kw["column"]
     strictly = bool(kw.get("strictly", False))
@@ -291,7 +287,7 @@ def _compile_monotonic(planner: Any, cfg: ExpectationConfiguration, increasing: 
         )
         return bool(success), out.get("result", {"success": success})
 
-    planner._items.append(_Item(cfg, decide, partition_capable=False))
+    planner._add_item(cfg, decide, partition_capable=False)
 
 
 def _compile_z_scores(planner: Any, cfg: ExpectationConfiguration) -> None:
@@ -310,8 +306,6 @@ def _compile_z_scores(planner: Any, cfg: ExpectationConfiguration) -> None:
     Pinned by tests/test_aggregates.py::test_zscore_degenerate_domains and
     the zmap fuzz grammar.
     """
-    from great_expectations_spark.plans.planner import _Item
-
     kw = cfg.kwargs
     column = kw["column"]
     threshold = float(kw["threshold"])
@@ -369,7 +363,7 @@ def _compile_z_scores(planner: Any, cfg: ExpectationConfiguration) -> None:
         )
         return bool(success), out.get("result", {"success": success})
 
-    planner._items.append(_Item(cfg, decide, partition_capable=True))
+    planner._add_item(cfg, decide, partition_capable=True)
 
 
 _QUERY_VIEW = "ge_spark_active_batch"
@@ -393,8 +387,6 @@ def _run_user_query(planner: Any, query: str, kwargs: Optional[dict] = None) -> 
 
 
 def _compile_query_no_rows(planner: Any, cfg: ExpectationConfiguration) -> None:
-    from great_expectations_spark.plans.planner import _Item
-
     query = cfg.kwargs["query"]
     qkw = dict(cfg.kwargs)
     rf = planner.rf
@@ -412,12 +404,10 @@ def _compile_query_no_rows(planner: Any, cfg: ExpectationConfiguration) -> None:
         res.unpersist()
         return n == 0, result
 
-    planner._items.append(_Item(cfg, decide, partition_capable=False))
+    planner._add_item(cfg, decide, partition_capable=False)
 
 
 def _compile_query_row_count(planner: Any, cfg: ExpectationConfiguration) -> None:
-    from great_expectations_spark.plans.planner import _Item
-
     kw = cfg.kwargs
     query = kw["query"]
 
@@ -431,13 +421,11 @@ def _compile_query_row_count(planner: Any, cfg: ExpectationConfiguration) -> Non
             bool(kw.get("strict_max", False)),
         )
 
-    planner._items.append(_Item(cfg, decide, partition_capable=False))
+    planner._add_item(cfg, decide, partition_capable=False)
 
 
 def _compile_row_count_equal_other_table(planner: Any, cfg: ExpectationConfiguration) -> None:
     """SQL-only in the reference (self_check/util.py:1892) — native here."""
-    from great_expectations_spark.plans.planner import _Item
-
     kw = cfg.kwargs
     dom, dom_id = planner._domain(cfg)
     a_elem = planner._reg(("element_count", dom_id), F.count(F.when(dom, F.lit(1))))
@@ -453,7 +441,7 @@ def _compile_row_count_equal_other_table(planner: Any, cfg: ExpectationConfigura
             "observed_value": {"self": mine, "other": other_count}
         }
 
-    planner._items.append(_Item(cfg, decide, partition_capable=False))
+    planner._add_item(cfg, decide, partition_capable=False)
 
 
 SPECIAL_COMPILERS: dict[str, Callable[[Any, ExpectationConfiguration], None]] = {

@@ -63,12 +63,12 @@ from great_expectations_spark.core.result import (
     suite_statistics,
     validate_mostly,
 )
-from great_expectations_spark.operators import schema_checks
+from great_expectations_spark.operators import drift, images, schema_checks, special
 from great_expectations_spark.operators.aggregates import AGG_BUILDERS
 from great_expectations_spark.operators.conditions import (
+    _MAP_BUILDERS,
     _ignore_row_if_considered,
     compile_map_condition,
-    is_map_expectation,
     translate_row_condition,
 )
 
@@ -141,6 +141,19 @@ class _Ctx:
         self.is_partition: bool = False
         self.partition_key: Optional[dict] = None  # set for partition decisions
 
+    def partition_top(self, gb: _GroupByResult) -> tuple[list, bool, Optional[int]]:
+        """(top, truncated, nonnull_total) — partition-local when deciding for
+        a partition; the single owner of the partition-key serialization used
+        to index groupBy tops."""
+        if self.is_partition and self.partition_key is not None:
+            pk = json.dumps(self.partition_key, sort_keys=True, default=str)
+            return (
+                gb.part_top.get(pk, []),
+                gb.part_top_truncated.get(pk, False),
+                gb.part_nonnull.get(pk),
+            )
+        return gb.top, gb.top_truncated, gb.total_count
+
 
 @dataclass
 class _Item:
@@ -210,6 +223,15 @@ class SuitePlanner:
 
     # ---- registration helpers -------------------------------------------
 
+    def _add_item(
+        self,
+        cfg: ExpectationConfiguration,
+        decide: Callable[[_Ctx], tuple[bool, dict]],
+        partition_capable: bool,
+    ) -> None:
+        """Queue one expectation's decider (run after every pass)."""
+        self._items.append(_Item(cfg, decide, partition_capable))
+
     def _reg(self, key_parts: tuple, expr: Column, distinct: bool = False) -> str:
         """Metric-identity dedup: same key → same aggregate expression."""
         key = json.dumps([str(p) for p in key_parts])
@@ -272,16 +294,6 @@ class SuitePlanner:
     # ---- compilation -----------------------------------------------------
 
     def compile(self) -> "SuitePlanner":
-        from great_expectations_spark.operators import drift as drift_ops
-        from great_expectations_spark.operators import special as special_ops
-
-        # the image expectations register on module import (images.py
-        # register_map_expectation at module level) — without this a
-        # hand-built image suite validated through the engine would fail
-        # with "unknown expectation_type" unless the caller happened to
-        # import operators.images first
-        from great_expectations_spark.operators import images as _images
-
         # auto-wire the shared decode projection: image map conditions
         # reference the `_decoded` struct (ONE Arrow decode reused by every
         # image expectation). Callers may enrich_images() themselves; when
@@ -294,13 +306,13 @@ class SuitePlanner:
         img_cfgs = [
             cfg
             for cfg in self.suite.expectations
-            if cfg.expectation_type in _images.IMAGE_EXPECTATION_TYPES
+            if cfg.expectation_type in images.IMAGE_EXPECTATION_TYPES
             and "decoded_col" not in cfg.kwargs
         ]
-        if img_cfgs and _images.DECODED_COL not in self.df.columns:
+        if img_cfgs and images.DECODED_COL not in self.df.columns:
             bytes_cols = {cfg.kwargs.get("column", "bytes") for cfg in img_cfgs}
             if len(bytes_cols) == 1 and bytes_cols.issubset(self.df.columns):
-                self.df = _images.enrich_images(
+                self.df = images.enrich_images(
                     self.df, bytes_col=bytes_cols.pop()
                 )
 
@@ -359,20 +371,10 @@ class SuitePlanner:
                         ),
                         meta=dict(cfg.meta),
                     )
-                if t in schema_checks.SCHEMA_EXPECTATION_TYPES:
-                    self._compile_schema(cfg)
-                elif is_map_expectation(t):
-                    self._compile_map(cfg)
-                elif t in AGG_BUILDERS:
-                    self._compile_agg(cfg)
-                elif t in _GROUPBY_COMPILERS:
-                    _GROUPBY_COMPILERS[t](self, cfg)
-                elif t in drift_ops.DRIFT_COMPILERS:
-                    drift_ops.DRIFT_COMPILERS[t](self, cfg)
-                elif t in special_ops.SPECIAL_COMPILERS:
-                    special_ops.SPECIAL_COMPILERS[t](self, cfg)
-                else:
+                compile_fn = _COMPILERS.get(t)
+                if compile_fn is None:
                     raise KeyError(f"unknown expectation_type: {t}")
+                compile_fn(self, cfg)
             except Exception as e:  # compile-time failure → failed EVR
                 if not self.catch_exceptions:
                     raise
@@ -383,10 +385,9 @@ class SuitePlanner:
         check = schema_checks.SCHEMA_CHECKS[cfg.expectation_type]
         # _schema_df = the pre-enrichment view: the auto-added `_decoded`
         # struct is engine plumbing and must not appear in table.columns
-        success, result = check(getattr(self, "_schema_df", self.df), cfg.kwargs)
-
-        self._items.append(
-            _Item(cfg, lambda ctx, s=success, r=result: (s, dict(r)), partition_capable=False)
+        success, result = check(self._schema_df, cfg.kwargs)
+        self._add_item(
+            cfg, lambda ctx, s=success, r=result: (s, dict(r)), partition_capable=False
         )
 
     def _compile_agg(self, cfg: ExpectationConfiguration) -> None:
@@ -399,9 +400,7 @@ class SuitePlanner:
             lambda key_parts, expr, **kw: self._reg((*key_parts, rc_id), expr, **kw)
         )
         decide = AGG_BUILDERS[cfg.expectation_type](cfg.kwargs, dom, reg)
-        self._items.append(
-            _Item(cfg, lambda ctx, d=decide: d(ctx.metrics), partition_capable=True)
-        )
+        self._add_item(cfg, lambda ctx, d=decide: d(ctx.metrics), partition_capable=True)
 
     _STRING_INPUT_TYPES = frozenset(
         {
@@ -472,90 +471,70 @@ class SuitePlanner:
                 result["details"] = {**result.get("details", {}), **extra_details}
             return bool(success), result
 
-        self._items.append(_Item(cfg, decide, partition_capable=True))
+        self._add_item(cfg, decide, partition_capable=True)
 
     # ---- execution -------------------------------------------------------
 
     def run(self, meta: Optional[dict] = None) -> SuiteValidationResult:
         self.compile()
-        df = self.df
-        if self.persist:
-            df = df.persist()
-
-        # phase 0: prerequisites (z-score etc.)
+        df = self.df.persist() if self.persist else self.df
+        # the finally below is the ONLY release of the persist: success, the
+        # isolation fallback and every re-raise all leave through it
         try:
-            if self._pre_aggs:
-                pre_row = df.agg(*self._pre_aggs.values()).collect()[0]
-                pre_metrics = pre_row.asDict()
-                for fin in self._deferred:
-                    fin(pre_metrics)  # type: ignore[call-arg]
-        except Exception as e:
-            if self.persist:
-                df.unpersist()
-            if not self.catch_exceptions:
-                raise
-            return self._run_isolated(meta, e)
+            # phases 0-3 share one failure contract. A single type-broken
+            # expectation fails a WHOLE pass (e.g. avg() over a string column
+            # raises at analysis time in the bundled job) — on any pass
+            # failure fall back to per-expectation isolation so the broken one
+            # gets an exception EVR and the rest still validate (the reference
+            # gets this for free from its one-job-per-metric model), or
+            # re-raise under catch_exceptions=False
+            try:
+                # phase 0: prerequisites (z-score etc.)
+                if self._pre_aggs:
+                    pre_metrics = df.agg(*self._pre_aggs.values()).collect()[0].asDict()
+                    for fin in self._deferred:
+                        fin(pre_metrics)  # type: ignore[call-arg]
 
-        # phase 1: the bundled main pass (+ isolated distinct bundle).
-        # A single type-broken expectation would fail the WHOLE bundled job
-        # (e.g. avg() over a string column raises at analysis time) — on
-        # failure fall back to per-expectation isolation so the broken one
-        # gets an exception EVR and the rest still validate (the reference
-        # gets this for free from its one-job-per-metric model).
-        try:
-            global_metrics, partition_rows = self._run_bundles(df)
-        except Exception as e:
-            if self.persist:
-                df.unpersist()
-            if not self.catch_exceptions:
-                raise
-            return self._run_isolated(meta, e)
+                # phase 1: the bundled main pass (+ isolated distinct bundle)
+                global_metrics, partition_rows = self._run_bundles(df)
 
-        if self.partition_by and not partition_rows and any(
-            it.partition_capable for it in self._items
-        ):
-            # a suite of ONLY groupBy-backed expectations registers no
-            # bundled aggregates, so the rollup pass never enumerated the
-            # partitions — enumerate them directly (bounded by partition
-            # count); such deciders read only groupby results, not metrics
-            pkeys = (
-                df.select(*self.partition_by)
-                .distinct()
-                .orderBy(*self.partition_by)
-                .collect()
-            )
-            partition_rows = [
-                ({c: r[c] for c in self.partition_by}, {}) for r in pkeys
-            ]
+                if self.partition_by and not partition_rows and any(
+                    it.partition_capable for it in self._items
+                ):
+                    # a suite of ONLY groupBy-backed expectations registers
+                    # no bundled aggregates, so the rollup pass never
+                    # enumerated the partitions — enumerate them directly
+                    # (bounded by partition count); such deciders read only
+                    # groupby results, not metrics
+                    pkeys = (
+                        df.select(*self.partition_by)
+                        .distinct()
+                        .orderBy(*self.partition_by)
+                        .collect()
+                    )
+                    partition_rows = [
+                        ({c: r[c] for c in self.partition_by}, {}) for r in pkeys
+                    ]
 
-        # phase 2: groupBy passes (value-counts family); phase 3:
-        # unexpected-value samples — both share the bundled passes'
-        # fallback contract: an execution failure here must become a
-        # per-expectation exception EVR (catch_exceptions=True) or re-raise
-        # (False), never escape validate() unhandled
-        try:
-            self._n_partitions = max(1, len(partition_rows))
-            ctx = _Ctx()
-            ctx.metrics = global_metrics
-            for key, need in self._groupby_needs.items():
-                ctx.groupby[key] = self._run_groupby(df, need)
+                # phase 2: groupBy passes (value-counts family); phase 3:
+                # unexpected-value samples
+                self._n_partitions = max(1, len(partition_rows))
+                ctx = _Ctx()
+                ctx.metrics = global_metrics
+                for key, need in self._groupby_needs.items():
+                    ctx.groupby[key] = self._run_groupby(df, need)
+                if self._sample_specs:
+                    self._run_samples(df, ctx)
+                    if self.rf.get("include_unexpected_rows"):
+                        self._run_unexpected_rows(df, ctx)
+            except Exception as e:
+                if not self.catch_exceptions:
+                    raise
+                return self._run_isolated(meta, e)
 
-            if self._sample_specs:
-                self._run_samples(df, ctx)
-                if self.rf.get("include_unexpected_rows"):
-                    self._run_unexpected_rows(df, ctx)
-        except Exception as e:
-            if self.persist:
-                df.unpersist()
-            if not self.catch_exceptions:
-                raise
-            return self._run_isolated(meta, e)
-
-        # decisions (_decide re-raises only under catch_exceptions=False —
-        # release the persist on that path too)
-        results: list[ExpectationValidationResult] = []
-        partition_results: list[ExpectationValidationResult] = []
-        try:
+            # decisions (_decide re-raises only under catch_exceptions=False)
+            results: list[ExpectationValidationResult] = []
+            partition_results: list[ExpectationValidationResult] = []
             for item in self._items:
                 results.append(self._decide(item, ctx))
                 if item.partition_capable and partition_rows:
@@ -568,10 +547,10 @@ class SuitePlanner:
                         evr = self._decide(item, pctx)
                         evr.partition = pkey
                         partition_results.append(evr)
-        except Exception:
+        finally:
             if self.persist:
                 df.unpersist()
-            raise
+
         for cfg, err in self._errors:
             results.append(
                 ExpectationValidationResult(
@@ -585,9 +564,6 @@ class SuitePlanner:
                     },
                 )
             )
-
-        if self.persist:
-            df.unpersist()
 
         success = all(r.success for r in results)
         # resolved metrics keyed by their human-readable identity (the _reg
@@ -987,23 +963,6 @@ class SuitePlanner:
 # ---- groupBy-based expectations (distinct sets / modes / uniqueness) -----
 
 
-def _partition_top_or_global(
-    ctx: _Ctx, gb: _GroupByResult
-) -> tuple[list, bool, Optional[int]]:
-    """(top, truncated, nonnull_total) — partition-local when deciding for a
-    partition; the single owner of the partition-key serialization used to
-    index groupBy results (drift deciders import this rather than hand-roll
-    the json convention)."""
-    if ctx.is_partition and ctx.partition_key is not None:
-        pk = json.dumps(ctx.partition_key, sort_keys=True, default=str)
-        return (
-            gb.part_top.get(pk, []),
-            gb.part_top_truncated.get(pk, False),
-            gb.part_nonnull.get(pk),
-        )
-    return gb.top, gb.top_truncated, gb.total_count
-
-
 def _compile_distinct_set(planner: SuitePlanner, cfg: ExpectationConfiguration, mode: str) -> None:
     name = cfg.kwargs["column"]
     value_set = cfg.kwargs.get("value_set")
@@ -1015,7 +974,7 @@ def _compile_distinct_set(planner: SuitePlanner, cfg: ExpectationConfiguration, 
 
     def decide(ctx: _Ctx) -> tuple[bool, dict]:
         gb = ctx.groupby[key]
-        top, truncated, _ = _partition_top_or_global(ctx, gb)
+        top, truncated, _ = ctx.partition_top(gb)
         observed = sorted(
             (values[0] for values, _ in top),
             key=lambda x: (str(type(x).__name__), str(x)),
@@ -1051,7 +1010,7 @@ def _compile_distinct_set(planner: SuitePlanner, cfg: ExpectationConfiguration, 
             }
         return bool(success), result
 
-    planner._items.append(_Item(cfg, decide, partition_capable=True))
+    planner._add_item(cfg, decide, partition_capable=True)
 
 
 def _compile_most_common(planner: SuitePlanner, cfg: ExpectationConfiguration) -> None:
@@ -1068,7 +1027,7 @@ def _compile_most_common(planner: SuitePlanner, cfg: ExpectationConfiguration) -
         gb = ctx.groupby[key]
         # tops are count-descending, so a truncated prefix still contains
         # every mode — truncation cannot change this verdict
-        top, _, _ = _partition_top_or_global(ctx, gb)
+        top, _, _ = ctx.partition_top(gb)
         if not top:
             return True, {"observed_value": []}
         max_cnt = top[0][1]
@@ -1085,7 +1044,7 @@ def _compile_most_common(planner: SuitePlanner, cfg: ExpectationConfiguration) -
             success = len(modes) == 1 and inter == 1
         return bool(success), {"observed_value": modes}
 
-    planner._items.append(_Item(cfg, decide, partition_capable=True))
+    planner._add_item(cfg, decide, partition_capable=True)
 
 
 def _compile_unique_map(planner: SuitePlanner, cfg: ExpectationConfiguration) -> None:
@@ -1200,7 +1159,7 @@ def _compile_unique_map(planner: SuitePlanner, cfg: ExpectationConfiguration) ->
             }
         return bool(success), result
 
-    planner._items.append(_Item(cfg, decide, partition_capable=True))
+    planner._add_item(cfg, decide, partition_capable=True)
 
 
 _GROUPBY_COMPILERS: dict[str, Callable[[SuitePlanner, ExpectationConfiguration], None]] = {
@@ -1215,4 +1174,16 @@ _GROUPBY_COMPILERS: dict[str, Callable[[SuitePlanner, ExpectationConfiguration],
     # of expect_select_column_values_to_be_unique_within_record —
     # dataset.py:4603-4626 "records can be duplicated"), so it compiles
     # through the map-condition registry, not the groupBy pass
+}
+
+
+# expectation type -> fn(planner, cfg): the ONE dispatch table, built from the
+# family tables (operators.images registered its map types on import above)
+_COMPILERS: dict[str, Callable[[SuitePlanner, ExpectationConfiguration], None]] = {
+    **dict.fromkeys(schema_checks.SCHEMA_CHECKS, SuitePlanner._compile_schema),
+    **dict.fromkeys(_MAP_BUILDERS, SuitePlanner._compile_map),
+    **dict.fromkeys(AGG_BUILDERS, SuitePlanner._compile_agg),
+    **_GROUPBY_COMPILERS,
+    **drift.DRIFT_COMPILERS,
+    **special.SPECIAL_COMPILERS,
 }

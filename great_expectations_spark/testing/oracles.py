@@ -15,17 +15,17 @@ from __future__ import annotations
 
 from typing import Any, Optional
 
+from great_expectations_spark.functions.image_codec import (
+    decode_image,
+    hamming64,
+    phash64,
+)
 from great_expectations_spark.operators.multimodal import (
     _decode_audio,
     _decode_video,
     audio_df,  # noqa: F401  (kept for symmetry; generators re-run inline)
 )
-from great_expectations_spark.testing.images import (
-    decode_image,
-    generate_images,
-    hamming64,
-    phash64,
-)
+from great_expectations_spark.testing.images import generate_images
 
 
 def _sql_lit(v: Any, typ: str) -> str:
@@ -264,7 +264,7 @@ def video_frames_sql(
     import numpy as np
 
     from great_expectations_spark.operators.multimodal import encode_video
-    from great_expectations_spark.testing.images import encode_image
+    from great_expectations_spark.functions.image_codec import encode_image
 
     rng = np.random.default_rng(seed)
     corrupt = set(rng.choice(n, size=int(n * corrupt_frac), replace=False).tolist())

@@ -13,14 +13,16 @@ from great_expectations_spark.operators.images import (
     image_benchmark_contamination,
     validate_images,
 )
-from great_expectations_spark.testing.images import (
+from great_expectations_spark.functions.image_codec import (
     CodecError,
     decode_image,
     encode_image,
-    generate_images,
     hamming64,
-    images_df,
     phash64,
+)
+from great_expectations_spark.testing.images import (
+    generate_images,
+    images_df,
     psnr,
 )
 

@@ -50,7 +50,7 @@ def test_video_enrich_and_frame_sampling(spark):
         assert len(r["frame_phashes"]) == r[1] == r["n_frames"]
 
     frames = mm.sample_frames(df, every_n=2)
-    from great_expectations_spark.testing.images import decode_image
+    from great_expectations_spark.functions.image_codec import decode_image
 
     sampled = frames.collect()
     # every good video contributes ceil(n_frames/2) frames

@@ -108,7 +108,7 @@ def test_clean_corpus_persist_intermediate(spark, corpus):
 def test_clean_image_corpus(spark):
     import numpy as np
 
-    from great_expectations_spark.testing.images import encode_image
+    from great_expectations_spark.functions.image_codec import encode_image
 
     rng = np.random.RandomState(9)
 
