@@ -692,7 +692,6 @@ def main() -> None:
                 "loadavg_start": load_start,
                 "loadavg_end": load_end,
                 "external_cpu_cores_avg": external_cores,
-                "idle_reference_sec": 13.069,
                 "sf": SF_DIR,
                 "cpus": CPUS,
                 "n_images": N_IMAGES,

@@ -52,6 +52,14 @@ class SparkValidationEngine:
         ``history_suite_name`` to bootstrap a new suite from another
         suite's run history instead.
 
+        ``persist``: True caches ``df`` for the call. Without it the call
+        still caches the columns of ``df`` the suite reads when computing
+        them runs Python (a pandas_udf kernel such as the image decode) and
+        more than one pass reads them, so each row goes through the kernel
+        once; a Python column no expectation reads is never computed. Either
+        cache is released before the call returns; an input the caller
+        already cached is used as is and stays cached.
+
         ``catch_exceptions``: True (default, the reference's graph_validate
         default — validator.py:956) captures per-expectation failures as
         exception EVRs; False re-raises the first failure out of this call,

@@ -14,7 +14,11 @@ Usage:
     suite.add("expect_image_bytes_to_be_decodable", column="bytes")
     suite.add("expect_image_dims_to_match_metadata", ...)
     engine.validate(df2, suite, ...)
-or one-shot: validate_images(df, suite, ...).
+or one-shot: validate_images(df, suite, ...). Either way the decode runs
+once per image per call: when the suite scans the decoded columns more than
+once (bundle + sample pass), validate persists the columns the suite reads
+and releases that cache before it returns. A frame the caller cached itself
+is read as is and left cached.
 
 Scale notes:
 - `bytes` is only projected when an image expectation is in the suite —

@@ -37,15 +37,23 @@ Domain (row_condition) filters are folded into aggregate expressions as
 ``F.when(dom, x)`` so differing domains still share the single scan; when all
 expectations share one domain the filter is applied to the DataFrame instead
 (predicate pushdown reaches the source scan).
+
+When the columns the passes read are computed by Python (the image decode
+kernel) and more than one pass reads them, those columns alone are persisted
+for the call and released at its end: each row goes through the kernel once,
+and a Python column no pass reads is still never computed. A cache the caller
+holds is never persisted or released here.
 """
 
 from __future__ import annotations
 
 import json
 import math
+import re
 from dataclasses import dataclass, field
 from typing import Any, Callable, Optional
 
+from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -80,6 +88,53 @@ DISTINCT_CAP = 65_536  # driver-side cap on collected distinct values
 # unbounded collect; partitions over their cap fall back to the exact
 # bounded aggregate
 PARTITION_TOP_BUDGET = 1 << 20
+
+
+# logical operators that run Python workers: ArrowEvalPython/BatchEvalPython
+# (pandas_udf / udf kernels), MapInPandas/MapInArrow and the grouped maps
+_PYTHON_NODE = re.compile(r"EvalPython|InPandas|InArrow")
+
+
+def _runs_python(df: DataFrame) -> bool:
+    """Whether computing df runs a Python kernel, i.e. whether every scan of
+    it pays the Python workers again. A cached relation is a leaf here:
+    Python under a cache the caller holds does not re-run. A plan the
+    optimizer rejects counts as no, which leaves such an input unpersisted."""
+    try:
+        stack = [df._jdf.queryExecution().optimizedPlan()]
+    except Exception:
+        return False
+    while stack:
+        node = stack.pop()
+        if _PYTHON_NODE.search(node.nodeName()):
+            return True
+        kids = node.children()
+        stack.extend(kids.apply(i) for i in range(kids.size()))
+    return False
+
+
+def _read_columns(
+    df: DataFrame, aggs: list[Column], rows: list[Column]
+) -> Optional[list[str]]:
+    """df's columns, in df's order, that the aggregate Columns `aggs` and the
+    row-level Columns `rows` read, as Spark's analyzer resolves them. None
+    when they do not resolve against df (the pass will fail on its own)."""
+
+    def attrs(seq) -> dict:
+        return {a.exprId().id(): a.name() for a in (seq.apply(i) for i in range(seq.size()))}
+
+    try:
+        names = attrs(df._jdf.queryExecution().analyzed().output())
+        read: set = set()
+        for probe, exprs in ((df.agg, aggs), (df.select, rows)):
+            if exprs:
+                plan = probe(*exprs)._jdf.queryExecution().analyzed()
+                read.update(attrs(plan.references().toSeq()))
+    except Exception:
+        return None
+    if not read <= names.keys():
+        return None
+    return [n for i, n in names.items() if i in read]
 
 
 def _caster_for(df: DataFrame, column: Optional[str]) -> Callable[[str], Any]:
@@ -475,9 +530,71 @@ class SuitePlanner:
 
     # ---- execution -------------------------------------------------------
 
+    def _passes(self) -> Optional[list[tuple[list[Column], list[Column]]]]:
+        """What each pass run() makes over the input reads, as (aggregate
+        Columns, row-level Columns); the sample pass counts although it is
+        skipped when nothing fails. None when a pass reads whole rows or
+        registers its expressions only after phase 0. A new pass in run()
+        must be listed here too: the call's cache holds only the columns
+        listed."""
+        if self._deferred or (
+            self._sample_specs and self.rf.get("include_unexpected_rows")
+        ):
+            return None
+        keys = [F.col(c) for c in self.partition_by]
+        passes: list[tuple[list[Column], list[Column]]] = []
+        if self._pre_aggs:
+            passes.append((list(self._pre_aggs.values()), []))
+        for aggs in (self._main_aggs, self._distinct_aggs):
+            if aggs:
+                passes.append((list(aggs.values()), keys))
+        if keys and not (self._main_aggs or self._distinct_aggs):
+            # groupBy-only suites list their partition keys in a query of
+            # their own
+            passes.append(([], keys))
+        for need in self._groupby_needs.values():
+            dom = [] if need.dom is None else [need.dom]
+            passes.append(([], [*keys, *(F.col(c) for c in need.cols), *dom]))
+        if self._sample_specs:
+            rows: list[Column] = []
+            for _, cond, value, col, _ in self._sample_specs:
+                rows += [cond, value]
+                if col in self.df.columns:
+                    rows.append(F.col(col))  # types the sampled values
+            passes.append(([], rows))
+        return passes
+
+    def _call_cache(self) -> Optional[DataFrame]:
+        """The relation run() persists for the call, or None. persist=True
+        means the whole input. Otherwise it is the input's columns that the
+        passes read, when computing them runs Python (the image decode) and
+        more than one pass reads them: cached, each row goes through the
+        kernel once per call, and a Python column no pass reads is never
+        computed. A relation that is already cached belongs to the caller:
+        it is neither persisted nor released here, which also keeps
+        _run_isolated's sub-planners off this run's cache."""
+        if self.persist:
+            target = self.df
+        else:
+            passes = self._passes()
+            if passes is None or len(passes) < 2 or not _runs_python(self.df):
+                return None
+            cols = _read_columns(
+                self.df,
+                [a for aggs, _ in passes for a in aggs],
+                [r for _, rows in passes for r in rows],
+            )
+            if not cols:
+                return None
+            target = self.df.select(*[F.col("`%s`" % c.replace("`", "``")) for c in cols])
+            if not _runs_python(target):
+                return None
+        return target if target.storageLevel == StorageLevel.NONE else None
+
     def run(self, meta: Optional[dict] = None) -> SuiteValidationResult:
         self.compile()
-        df = self.df.persist() if self.persist else self.df
+        cache = self._call_cache()
+        df = self.df if cache is None else cache.persist()
         # the finally below is the ONLY release of the persist: success, the
         # isolation fallback and every re-raise all leave through it
         try:
@@ -548,7 +665,7 @@ class SuitePlanner:
                         evr.partition = pkey
                         partition_results.append(evr)
         finally:
-            if self.persist:
+            if cache is not None:
                 df.unpersist()
 
         for cfg, err in self._errors:

@@ -1,17 +1,24 @@
 """SuitePlanner structure contracts: one dispatch table, one persist lifecycle
-(every failure path releases the cache and honours catch_exceptions), and a
-pinned Spark job budget so no refactor silently adds a scan."""
+(every failure path releases the cache and honours catch_exceptions, and a
+run releases only the caches it created), and a pinned Spark job budget so no
+refactor silently adds a scan."""
 
 import json
 import subprocess
 import sys
 import uuid
 
+import pandas as pd
 import pytest
 from pyspark import StorageLevel
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from great_expectations_spark import ExpectationSuite, SparkValidationEngine
+from great_expectations_spark.operators.images import enrich_images
 from great_expectations_spark.plans import planner as planner_mod
+from great_expectations_spark.testing.images import distributed_images_df
+from perfbench.workloads import canonical, checkpoint_suite, image_suite
 
 
 def test_dispatch_table_covers_every_family_once():
@@ -141,8 +148,155 @@ def _job_count(spark, fn) -> int:
     return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
+@pytest.fixture
+def persist_calls(spark, monkeypatch):
+    """Every relation SuitePlanner.run persists for its call while the test
+    runs (a groupBy pass caching its own grouped frame is not counted). The
+    session's concrete DataFrame class overrides persist, so the spy goes
+    there."""
+    calls = []
+    cls = type(spark.range(0))
+    persist = cls.persist
+
+    def spy(self, *args, **kwargs):
+        if sys._getframe(1).f_code is planner_mod.SuitePlanner.run.__code__:
+            calls.append(self)
+        return persist(self, *args, **kwargs)
+
+    monkeypatch.setattr(cls, "persist", spy)
+    return calls
+
+
+def _images(spark, n=200):
+    return distributed_images_df(spark, n, partitions=4, seed=3)
+
+
+def _raised(res) -> list:
+    return [r for r in res.results if (r.exception_info or {}).get("raised_exception")]
+
+
+def test_caller_cache_survives_persist_true(spark):
+    # persist=True on a frame the caller already cached: the run neither
+    # persists nor releases it (it used to unpersist the caller's cache)
+    df = spark.createDataFrame([(float(i % 7),) for i in range(40)], ["x"]).cache()
+    df.count()
+    suite = ExpectationSuite("owned")
+    suite.add("expect_column_values_to_be_between", column="x", min_value=0, max_value=3)
+    suite.add("expect_column_most_common_value_to_be_in_set", column="x", value_set=[0.0])
+    before = _cached(spark, df)
+    assert before[1]
+    try:
+        res = SparkValidationEngine(spark).validate(df, suite, persist=True)
+        assert not _raised(res)
+        assert _cached(spark, df) == before
+    finally:
+        df.unpersist()
+
+
+def test_caller_cached_image_frame_not_released(spark):
+    df = enrich_images(_images(spark)).cache()
+    df.count()
+    before = _cached(spark, df)
+    try:
+        res = SparkValidationEngine(spark).validate(
+            df, image_suite(), result_format="SUMMARY", partition_by=["fmt"]
+        )
+        assert not _raised(res)
+        assert _cached(spark, df) == before
+    finally:
+        df.unpersist()
+
+
+def test_isolation_fallback_releases_every_cache(spark, monkeypatch, persist_calls):
+    # avg() over a string column fails the bundled pass; the fallback's
+    # single-expectation planners cache what they read of the image input
+    # themselves, and every cache made during the call is gone at its end
+    suite = image_suite()
+    suite.add("expect_column_mean_to_be_between", column="caption", min_value=0, max_value=1)
+    fallbacks = []
+    run_isolated = planner_mod.SuitePlanner._run_isolated
+
+    def spy(self, *args, **kwargs):
+        fallbacks.append(len(self.suite.expectations))
+        return run_isolated(self, *args, **kwargs)
+
+    monkeypatch.setattr(planner_mod.SuitePlanner, "_run_isolated", spy)
+    df = _images(spark)
+    before, _ = _cached(spark, df)
+    res = SparkValidationEngine(spark).validate(df, suite, result_format="SUMMARY")
+    # the run's fallback and the broken expectation's own planner's one
+    assert fallbacks == [len(suite.expectations), 1]
+    assert [r.expectation_config["expectation_type"] for r in _raised(res)] == [
+        "expect_column_mean_to_be_between"
+    ]
+    assert len(res.results) == len(suite.expectations)
+    assert persist_calls
+    assert all(d.storageLevel == StorageLevel.NONE for d in persist_calls)
+    assert _cached(spark, df) == (before, False)
+
+
+@F.pandas_udf(T.LongType())
+def _fails_on_seven(ids: pd.Series) -> pd.Series:
+    if (ids == 7).any():
+        raise ValueError("row 7")
+    return ids
+
+
+def test_unread_python_column_is_never_computed(spark, persist_calls):
+    # a Python column no expectation reads stays pruned from every pass, as
+    # it is without any cache: it neither triggers a persist nor lands in
+    # one, so its failure on one row cannot fail the suite
+    eng = SparkValidationEngine(spark)
+    plain = spark.range(40).withColumn("x", (F.col("id") % 7).cast("double"))
+    suite = ExpectationSuite("unread_udf")
+    suite.add("expect_column_values_to_be_between", column="x", min_value=0, max_value=3)
+    suite.add("expect_column_most_common_value_to_be_in_set", column="x", value_set=[0.0])
+    images = _images(spark)
+    image_no = F.substring("image_id", -4, 4).cast("long")
+    for df, suite, key, persists in (
+        (plain, suite, F.col("id"), 0),
+        (images, image_suite(), image_no, 1),
+    ):
+        expected = canonical(eng.validate(df, suite, result_format="SUMMARY"))
+        del persist_calls[:]
+        before, _ = _cached(spark, df)
+        res = eng.validate(
+            df.withColumn("boom", _fails_on_seven(key)),
+            suite,
+            result_format="SUMMARY",
+        )
+        assert not _raised(res)
+        assert canonical(res) == expected
+        assert len(persist_calls) == persists
+        assert all("boom" not in d.columns for d in persist_calls)
+        assert _cached(spark, df) == (before, False)
+
+
+def test_no_persist_without_a_repeated_python_scan(spark, lineitem, persist_calls):
+    eng = SparkValidationEngine(spark)
+    # one pass over a Python input: BOOLEAN_ONLY has no sample pass
+    res = eng.validate(_images(spark), image_suite(), result_format="BOOLEAN_ONLY")
+    assert not _raised(res)
+    # several passes, but no Python in the plan
+    res = eng.validate(
+        lineitem, checkpoint_suite(), result_format="SUMMARY", partition_by=["l_returnflag"]
+    )
+    assert not _raised(res)
+    # several passes over a frame whose full plan the optimizer rejects (a
+    # constant invalid cast in a column no pass reads): the plan probe must
+    # not turn that into an exception EVR, and nothing is cached
+    df = spark.range(3).withColumn("bad", F.lit("abc").cast("int"))
+    suite = ExpectationSuite("unread")
+    suite.add("expect_column_values_to_be_between", column="id", min_value=0, max_value=1)
+    suite.add("expect_column_most_common_value_to_be_in_set", column="id", value_set=[0])
+    res = eng.validate(df, suite)
+    assert not _raised(res)
+    assert res.results[0].result["unexpected_count"] == 1
+    assert persist_calls == []
+
+
 @pytest.mark.parametrize("partition_by, jobs", [(None, 9), (["l_linestatus"], 15)])
-def test_job_budget(spark, lineitem, partition_by, jobs):
+def test_job_budget(spark, lineitem, partition_by, jobs, persist_calls):
     suite = ExpectationSuite("budget")
     suite.add("expect_column_values_to_be_between", column="l_quantity", min_value=1, max_value=45)
     suite.add("expect_column_mean_to_be_between", column="l_extendedprice", min_value=0, max_value=1e9)
@@ -164,3 +318,4 @@ def test_job_budget(spark, lineitem, partition_by, jobs):
         lambda: eng.validate(lineitem, suite, result_format="SUMMARY", partition_by=partition_by),
     )
     assert n == jobs
+    assert persist_calls == []
