@@ -149,10 +149,10 @@ def _observed_counts_or_exact(
     falls back to the exact bounded aggregate, lumping the out-of-partition
     tail under _LUMPED_TAIL and reporting the lump in details instead of
     silently computing on a clipped table."""
-    top, truncated, nn_total = ctx.partition_top(gb)
+    top, truncated = ctx.partition_top(gb)
     if not truncated:
         counts = {vals[0]: cnt for vals, cnt in top}
-        return counts, nn_total or sum(counts.values()), None
+        return counts, sum(counts.values()), None
     if ctx.is_partition and ctx.partition_key is not None:
         base, trunc_note = _partition_filtered(planner, ctx), {
             "partition": dict(ctx.partition_key)
@@ -897,7 +897,7 @@ def _compile_cramers_phi(planner: Any, cfg: ExpectationConfiguration) -> None:
 
     def decide(ctx) -> tuple[bool, dict]:
         gb = ctx.groupby[key]
-        top, truncated, _ = ctx.partition_top(gb)
+        top, truncated = ctx.partition_top(gb)
         if truncated:
             base = (
                 _partition_filtered(planner, ctx)

@@ -85,23 +85,25 @@ def _compile_exist_in(planner: Any, cfg: ExpectationConfiguration) -> None:
         multi = bool(planner.partition_by) or rf["result_format"] != "BOOLEAN_ONLY"
         if multi:
             violations = violations.persist()
-        state["global"] = violations.count()
-        if planner.partition_by:
-            rows = violations.groupBy(*planner.partition_by).count().collect()
-            state["parts"] = {
-                json.dumps({c: r[c] for c in planner.partition_by}, sort_keys=True, default=str): int(r["count"])
-                for r in rows
-            }
-        if rf["result_format"] != "BOOLEAN_ONLY":
-            n = rf["partial_unexpected_count"]
-            if len(columns) == 1:
-                rows = violations.select(columns[0]).limit(n).collect()
-                state["sample"] = [r[0] for r in rows]
-            else:
-                rows = violations.select(*columns).limit(n).collect()
-                state["sample"] = [json.dumps(list(r), default=str) for r in rows]
-        if multi:
-            violations.unpersist()
+        try:
+            state["global"] = violations.count()
+            if planner.partition_by:
+                rows = violations.groupBy(*planner.partition_by).count().collect()
+                state["parts"] = {
+                    json.dumps({c: r[c] for c in planner.partition_by}, sort_keys=True, default=str): int(r["count"])
+                    for r in rows
+                }
+            if rf["result_format"] != "BOOLEAN_ONLY":
+                n = rf["partial_unexpected_count"]
+                if len(columns) == 1:
+                    rows = violations.select(columns[0]).limit(n).collect()
+                    state["sample"] = [r[0] for r in rows]
+                else:
+                    rows = violations.select(*columns).limit(n).collect()
+                    state["sample"] = [json.dumps(list(r), default=str) for r in rows]
+        finally:
+            if multi:
+                violations.unpersist()
 
     def decide(ctx) -> tuple[bool, dict]:
         _compute()
@@ -392,16 +394,17 @@ def _compile_query_no_rows(planner: Any, cfg: ExpectationConfiguration) -> None:
     rf = planner.rf
 
     def decide(ctx) -> tuple[bool, dict]:
-        res = _run_user_query(planner, query, qkw)
-        res = res.persist()
-        n = res.count()
-        result: dict[str, Any] = {"observed_value": n}
-        if n and rf["result_format"] != "BOOLEAN_ONLY":
-            rows = res.limit(rf["partial_unexpected_count"]).collect()
-            result["partial_unexpected_list"] = [
-                json.dumps(r.asDict(), default=str) for r in rows
-            ]
-        res.unpersist()
+        res = _run_user_query(planner, query, qkw).persist()
+        try:
+            n = res.count()
+            result: dict[str, Any] = {"observed_value": n}
+            if n and rf["result_format"] != "BOOLEAN_ONLY":
+                rows = res.limit(rf["partial_unexpected_count"]).collect()
+                result["partial_unexpected_list"] = [
+                    json.dumps(r.asDict(), default=str) for r in rows
+                ]
+        finally:
+            res.unpersist()
         return n == 0, result
 
     planner._add_item(cfg, decide, partition_capable=False)

@@ -163,24 +163,31 @@ class _GroupByNeed:
     # partition_by); only materialized when the suite has partition_by
     want_partition_top: bool = False
 
+    def rows(self) -> Optional[Column]:
+        """The filter selecting the rows this need groups (None = every row):
+        its domain, and its keys not null when it drops nulls."""
+        cond = self.dom
+        if self.drop_nulls:
+            for c in self.cols:
+                nn = F.col(c).isNotNull()
+                cond = nn if cond is None else cond & nn
+        return cond
+
 
 @dataclass
 class _GroupByResult:
     dup_row_count: int = 0  # rows belonging to a value with count > 1
     dup_value_count: int = 0  # distinct values with count > 1
     distinct_count: int = 0
-    total_count: int = 0
     top: list[tuple[tuple, int]] = field(default_factory=list)  # (values, count)
     dup_sample: list[tuple[tuple, int]] = field(default_factory=list)
     top_truncated: bool = False
     # json(partition_key) -> rows in that partition whose value is a
     # (global) duplicate; populated when the suite has partition_by
     part_dup_rows: dict = field(default_factory=dict)
-    part_considered: dict = field(default_factory=dict)
     # json(partition_key) -> partition-local value counts (want_partition_top)
     part_top: dict = field(default_factory=dict)  # pk -> list[(values, count)]
     part_top_truncated: dict = field(default_factory=dict)  # pk -> bool
-    part_nonnull: dict = field(default_factory=dict)  # pk -> considered rows
     part_top_cap: int = DISTINCT_CAP  # effective per-partition top cap
 
 
@@ -196,18 +203,15 @@ class _Ctx:
         self.is_partition: bool = False
         self.partition_key: Optional[dict] = None  # set for partition decisions
 
-    def partition_top(self, gb: _GroupByResult) -> tuple[list, bool, Optional[int]]:
-        """(top, truncated, nonnull_total) — partition-local when deciding for
-        a partition; the single owner of the partition-key serialization used
-        to index groupBy tops."""
+    def partition_top(self, gb: _GroupByResult) -> tuple[list, bool]:
+        """(top, truncated) — partition-local when deciding for a partition;
+        the single owner of the partition-key serialization used to index
+        groupBy tops. A top that is not truncated holds every value, so its
+        counts sum to the rows it was computed over."""
         if self.is_partition and self.partition_key is not None:
             pk = json.dumps(self.partition_key, sort_keys=True, default=str)
-            return (
-                gb.part_top.get(pk, []),
-                gb.part_top_truncated.get(pk, False),
-                gb.part_nonnull.get(pk),
-            )
-        return gb.top, gb.top_truncated, gb.total_count
+            return gb.part_top.get(pk, []), gb.part_top_truncated.get(pk, False)
+        return gb.top, gb.top_truncated
 
 
 @dataclass
@@ -838,16 +842,9 @@ class SuitePlanner:
             ctx.sample_rows.setdefault(r["_eid"], []).append(_json.loads(r["_row"]))
 
     def _run_groupby(self, df: DataFrame, need: _GroupByNeed) -> _GroupByResult:
-        cols = [F.col(c) for c in need.cols]
-        base = df
-        if need.dom is not None:
-            base = base.filter(need.dom)
-        if need.drop_nulls:
-            cond = cols[0].isNotNull()
-            for c in cols[1:]:
-                cond = cond & c.isNotNull()
-            base = base.filter(cond)
-        grouped = base.groupBy(*cols).agg(F.count(F.lit(1)).alias("_cnt"))
+        rows = need.rows()
+        base = df if rows is None else df.filter(rows)
+        grouped = base.groupBy(*need.cols).agg(F.count(F.lit(1)).alias("_cnt"))
         n_products = sum(
             [need.want_dup_stats, need.want_top, need.want_dup_sample]
         )
@@ -860,12 +857,10 @@ class SuitePlanner:
                     F.sum(F.when(F.col("_cnt") > 1, F.col("_cnt"))).alias("dup_rows"),
                     F.count(F.when(F.col("_cnt") > 1, F.lit(1))).alias("dup_vals"),
                     F.count(F.lit(1)).alias("distinct"),
-                    F.sum("_cnt").alias("total"),
                 ).collect()[0]
                 out.dup_row_count = int(row["dup_rows"] or 0)
                 out.dup_value_count = int(row["dup_vals"] or 0)
                 out.distinct_count = int(row["distinct"] or 0)
-                out.total_count = int(row["total"] or 0)
             if need.want_top:
                 top_rows = (
                     grouped.orderBy(F.desc("_cnt"), *[F.asc(c) for c in need.cols])
@@ -877,20 +872,6 @@ class SuitePlanner:
                     (tuple(r[c] for c in need.cols), int(r["_cnt"]))
                     for r in top_rows[:DISTINCT_CAP]
                 ]
-                if not need.want_dup_stats:
-                    if out.top_truncated:
-                        # the collected top is a prefix — totals from it would
-                        # be silently low; one tiny agg over the (already
-                        # shuffled) grouped frame keeps them exact
-                        row = grouped.agg(
-                            F.count(F.lit(1)).alias("distinct"),
-                            F.sum("_cnt").alias("total"),
-                        ).collect()[0]
-                        out.distinct_count = int(row["distinct"] or 0)
-                        out.total_count = int(row["total"] or 0)
-                    else:
-                        out.distinct_count = len(out.top)
-                        out.total_count = sum(c for _, c in out.top)
             if need.want_dup_sample:
                 dup_rows = (
                     grouped.filter(F.col("_cnt") > 1)
@@ -922,27 +903,16 @@ class SuitePlanner:
                     ),
                 )
                 out.part_top_cap = per_part_cap
-                pgrouped = (
+                w = Window.partitionBy(
+                    *[F.col(c) for c in self.partition_by]
+                ).orderBy(F.desc("_cnt"), *[F.asc(c) for c in need.cols])
+                prows = (
                     base.groupBy(*self.partition_by, *need.cols)
                     .agg(F.count(F.lit(1)).alias("_cnt"))
-                    .persist()
+                    .withColumn("_rk", F.row_number().over(w))
+                    .filter(F.col("_rk") <= per_part_cap + 1)
+                    .collect()
                 )
-                try:
-                    w = Window.partitionBy(
-                        *[F.col(c) for c in self.partition_by]
-                    ).orderBy(F.desc("_cnt"), *[F.asc(c) for c in need.cols])
-                    prows = (
-                        pgrouped.withColumn("_rk", F.row_number().over(w))
-                        .filter(F.col("_rk") <= per_part_cap + 1)
-                        .collect()
-                    )
-                    ptots = (
-                        pgrouped.groupBy(*self.partition_by)
-                        .agg(F.sum("_cnt").alias("_tot"))
-                        .collect()
-                    )
-                finally:
-                    pgrouped.unpersist()
                 for r in prows:
                     pk = json.dumps(
                         {c: r[c] for c in self.partition_by},
@@ -955,14 +925,6 @@ class SuitePlanner:
                     out.part_top.setdefault(pk, []).append(
                         (tuple(r[c] for c in need.cols), int(r["_cnt"]))
                     )
-                out.part_nonnull = {
-                    json.dumps(
-                        {c: r[c] for c in self.partition_by},
-                        sort_keys=True,
-                        default=str,
-                    ): int(r["_tot"] or 0)
-                    for r in ptots
-                }
                 for pk_top in out.part_top.values():
                     pk_top.sort(key=lambda vc: (-vc[1], tuple(str(v) for v in vc[0])))
             if need.want_dup_stats and self.partition_by:
@@ -990,11 +952,6 @@ class SuitePlanner:
                 out.part_dup_rows = {
                     json.dumps({c: r[c] for c in self.partition_by}, sort_keys=True, default=str): int(r["count"])
                     for r in prows
-                }
-                crows = base.groupBy(*self.partition_by).count().collect()
-                out.part_considered = {
-                    json.dumps({c: r[c] for c in self.partition_by}, sort_keys=True, default=str): int(r["count"])
-                    for r in crows
                 }
         finally:
             if n_products > 1:
@@ -1091,7 +1048,7 @@ def _compile_distinct_set(planner: SuitePlanner, cfg: ExpectationConfiguration, 
 
     def decide(ctx: _Ctx) -> tuple[bool, dict]:
         gb = ctx.groupby[key]
-        top, truncated, _ = ctx.partition_top(gb)
+        top, truncated = ctx.partition_top(gb)
         observed = sorted(
             (values[0] for values, _ in top),
             key=lambda x: (str(type(x).__name__), str(x)),
@@ -1144,7 +1101,7 @@ def _compile_most_common(planner: SuitePlanner, cfg: ExpectationConfiguration) -
         gb = ctx.groupby[key]
         # tops are count-descending, so a truncated prefix still contains
         # every mode — truncation cannot change this verdict
-        top, _, _ = ctx.partition_top(gb)
+        top, _ = ctx.partition_top(gb)
         if not top:
             return True, {"observed_value": []}
         max_cnt = top[0][1]
@@ -1227,19 +1184,25 @@ def _compile_unique_map(planner: SuitePlanner, cfg: ExpectationConfiguration) ->
         cols, drop_nulls=drop_nulls, dom=gb_dom, rc_id=gb_id,
         want_dup_stats=True, want_dup_sample=True,
     )
+    # the rows the groupBy pass groups, counted in the bundle, so global and
+    # per-partition totals come with every other metric
+    rows = planner._groupby_needs[key].rows()
+    a_cons = planner._reg(
+        ("groupby_rows", gb_id, ",".join(cols), drop_nulls),
+        F.count(F.lit(1) if rows is None else F.when(rows, F.lit(1))),
+    )
     rf = planner.rf
 
     def decide(ctx: _Ctx) -> tuple[bool, dict]:
         gb = ctx.groupby[key]
         elem = ctx.metrics.get(a_elem, 0) or 0
+        considered = ctx.metrics[a_cons] or 0
         if ctx.is_partition and ctx.partition_key is not None:
             # per-partition verdict: rows of THIS partition whose value is a
             # global duplicate
             pk = json.dumps(ctx.partition_key, sort_keys=True, default=str)
-            considered = gb.part_considered.get(pk, 0)
             unexpected = gb.part_dup_rows.get(pk, 0)
         else:
-            considered = gb.total_count
             unexpected = gb.dup_row_count
         if elem == 0 or considered == 0:
             success = True

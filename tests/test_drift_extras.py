@@ -452,9 +452,10 @@ def test_cramers_phi_reference_golden_cases(spark):
     import json
     import os
 
-    from golden_harness import JSON_ROOT, run_case
+    from golden_harness import JSON_ROOT, require_corpus, run_case
     from great_expectations_spark.engine import SparkValidationEngine
 
+    require_corpus()
     path = os.path.join(
         JSON_ROOT,
         "column_aggregate_expectations",

@@ -776,6 +776,27 @@ def test_experimental_row_condition_grammar(spark):
     assert caseless.result["element_count"] == 5
 
 
+@pytest.mark.parametrize("parser", [None, "spark_sql", "spark"])
+def test_spark_sql_parser_aliases(spark, parser):
+    # deliberate divergence (translate_row_condition): a missing parser and
+    # "spark_sql" filter as raw Spark SQL, like "spark", where the reference
+    # raises for them; the AND clause the mini-DSL would drop is applied
+    df = spark.createDataFrame(
+        [(i, "x" if i % 2 else None) for i in range(10)], ["i", "s"]
+    )
+    evr = run_one(
+        df,
+        "expect_column_values_to_not_be_null",
+        column="s",
+        row_condition="i > 5 AND s IS NULL",
+        condition_parser=parser,
+    )
+    assert not evr.exception_info or not evr.exception_info.get("raised_exception")
+    # domain is i in {6, 8}: both rows null
+    assert evr.result["element_count"] == 2
+    assert evr.result["unexpected_count"] == 2
+
+
 def test_experimental_grammar_differential_vs_pyparsing(spark):
     # transliteration guard: the engine's _DSL_RE against the reference's
     # ACTUAL pyparsing grammar, rebuilt verbatim from row_conditions.py —

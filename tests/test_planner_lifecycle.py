@@ -57,10 +57,22 @@ print(json.dumps({
     assert got["total"] == sum(got["sizes"].values()) == 71
 
 
-def _cached(spark, df) -> tuple[int, bool]:
-    """(persistent RDD count of the session, whether df is in the cache)."""
-    n = spark.sparkContext._jsc.sc().getPersistentRDDs().size()
-    return n, df.storageLevel != StorageLevel.NONE
+def _rdd_mark(spark) -> int:
+    """An id below that of every RDD the session creates from now on."""
+    return spark.sparkContext._jsc.sc().newRddId()
+
+
+def _persistent_rdds(spark, mark: int) -> int:
+    """How many persistent RDDs created since mark the session holds. Older
+    ones are left out: the session holds persistent RDDs weakly, so one an
+    earlier test persisted and dropped (the dedup operators' local
+    checkpoints) leaves the session whenever the JVM collects it."""
+    return sum(1 for i in spark.sparkContext._jsc.getPersistentRDDs().keys() if i > mark)
+
+
+def _cached(spark, df, mark: int) -> tuple[int, bool]:
+    """(persistent RDDs created since mark, whether df is in the cache)."""
+    return _persistent_rdds(spark, mark), df.storageLevel != StorageLevel.NONE
 
 
 def test_partition_enumeration_failure_releases_persist(spark):
@@ -71,19 +83,19 @@ def test_partition_enumeration_failure_releases_persist(spark):
     suite = ExpectationSuite("enum")
     suite.add("expect_column_distinct_values_to_be_in_set", column="i", value_set=[1, 2])
     eng = SparkValidationEngine(spark)
-    before, _ = _cached(spark, df)
+    mark = _rdd_mark(spark)
 
     res = eng.validate(df, suite, partition_by=["missing"], persist=True)
     assert not res.success
     assert res.results[0].exception_info["raised_exception"]
     assert "missing" in res.results[0].exception_info["exception_message"]
-    assert _cached(spark, df) == (before, False)
+    assert _cached(spark, df, mark) == (0, False)
 
     with pytest.raises(Exception, match="missing"):
         eng.validate(
             df, suite, partition_by=["missing"], persist=True, catch_exceptions=False
         )
-    assert _cached(spark, df) == (before, False)
+    assert _cached(spark, df, mark) == (0, False)
 
 
 @pytest.mark.parametrize(
@@ -119,7 +131,7 @@ def test_every_phase_failure_releases_persist(spark, monkeypatch, phase, catch):
         monkeypatch.setattr(planner_mod.SuitePlanner, phase, boom)
 
     eng = SparkValidationEngine(spark)
-    before, _ = _cached(spark, df)
+    mark = _rdd_mark(spark)
     if catch and phase != "_decide":
         res = eng.validate(df, suite, persist=True)
         errors = [
@@ -133,7 +145,7 @@ def test_every_phase_failure_releases_persist(spark, monkeypatch, phase, catch):
         # _decide aborts the run whatever catch_exceptions says
         with pytest.raises(RuntimeError, match=msg):
             eng.validate(df, suite, persist=True, catch_exceptions=catch)
-    assert _cached(spark, df) == (before, False)
+    assert _cached(spark, df, mark) == (0, False)
 
 
 def _job_count(spark, fn) -> int:
@@ -183,12 +195,12 @@ def test_caller_cache_survives_persist_true(spark):
     suite = ExpectationSuite("owned")
     suite.add("expect_column_values_to_be_between", column="x", min_value=0, max_value=3)
     suite.add("expect_column_most_common_value_to_be_in_set", column="x", value_set=[0.0])
-    before = _cached(spark, df)
-    assert before[1]
+    mark = _rdd_mark(spark)
+    assert _cached(spark, df, mark) == (0, True)
     try:
         res = SparkValidationEngine(spark).validate(df, suite, persist=True)
         assert not _raised(res)
-        assert _cached(spark, df) == before
+        assert _cached(spark, df, mark) == (0, True)
     finally:
         df.unpersist()
 
@@ -196,13 +208,13 @@ def test_caller_cache_survives_persist_true(spark):
 def test_caller_cached_image_frame_not_released(spark):
     df = enrich_images(_images(spark)).cache()
     df.count()
-    before = _cached(spark, df)
+    mark = _rdd_mark(spark)
     try:
         res = SparkValidationEngine(spark).validate(
             df, image_suite(), result_format="SUMMARY", partition_by=["fmt"]
         )
         assert not _raised(res)
-        assert _cached(spark, df) == before
+        assert _cached(spark, df, mark) == (0, True)
     finally:
         df.unpersist()
 
@@ -222,7 +234,7 @@ def test_isolation_fallback_releases_every_cache(spark, monkeypatch, persist_cal
 
     monkeypatch.setattr(planner_mod.SuitePlanner, "_run_isolated", spy)
     df = _images(spark)
-    before, _ = _cached(spark, df)
+    mark = _rdd_mark(spark)
     res = SparkValidationEngine(spark).validate(df, suite, result_format="SUMMARY")
     # the run's fallback and the broken expectation's own planner's one
     assert fallbacks == [len(suite.expectations), 1]
@@ -232,7 +244,7 @@ def test_isolation_fallback_releases_every_cache(spark, monkeypatch, persist_cal
     assert len(res.results) == len(suite.expectations)
     assert persist_calls
     assert all(d.storageLevel == StorageLevel.NONE for d in persist_calls)
-    assert _cached(spark, df) == (before, False)
+    assert _cached(spark, df, mark) == (0, False)
 
 
 @F.pandas_udf(T.LongType())
@@ -259,7 +271,7 @@ def test_unread_python_column_is_never_computed(spark, persist_calls):
     ):
         expected = canonical(eng.validate(df, suite, result_format="SUMMARY"))
         del persist_calls[:]
-        before, _ = _cached(spark, df)
+        mark = _rdd_mark(spark)
         res = eng.validate(
             df.withColumn("boom", _fails_on_seven(key)),
             suite,
@@ -269,7 +281,7 @@ def test_unread_python_column_is_never_computed(spark, persist_calls):
         assert canonical(res) == expected
         assert len(persist_calls) == persists
         assert all("boom" not in d.columns for d in persist_calls)
-        assert _cached(spark, df) == (before, False)
+        assert _cached(spark, df, mark) == (0, False)
 
 
 def test_no_persist_without_a_repeated_python_scan(spark, lineitem, persist_calls):
@@ -295,10 +307,11 @@ def test_no_persist_without_a_repeated_python_scan(spark, lineitem, persist_call
     assert persist_calls == []
 
 
-@pytest.mark.parametrize("partition_by, jobs", [(None, 9), (["l_linestatus"], 15)])
+@pytest.mark.parametrize("partition_by, jobs", [(None, 14), (["l_linestatus"], 20)])
 def test_job_budget(spark, lineitem, partition_by, jobs, persist_calls):
     suite = ExpectationSuite("budget")
     suite.add("expect_column_values_to_be_between", column="l_quantity", min_value=1, max_value=45)
+    suite.add("expect_column_values_to_be_unique", column="l_orderkey")
     suite.add("expect_column_mean_to_be_between", column="l_extendedprice", min_value=0, max_value=1e9)
     suite.add("expect_column_most_common_value_to_be_in_set", column="l_returnflag", value_set=["N"])
     suite.add(
@@ -319,3 +332,32 @@ def test_job_budget(spark, lineitem, partition_by, jobs, persist_calls):
     )
     assert n == jobs
     assert persist_calls == []
+
+
+def _session_caches(spark, mark: int) -> tuple[int, bool]:
+    """(persistent RDDs created since mark, whether the CacheManager holds no
+    entry)."""
+    return (
+        _persistent_rdds(spark, mark),
+        spark._jsparkSession.sharedState().cacheManager().isEmpty(),
+    )
+
+
+@pytest.mark.parametrize("case", ["exist_in", "query_no_rows"])
+def test_special_pass_failure_releases_its_cache(spark, case):
+    # a special pass that persists its own relation releases it when the
+    # query behind it fails: the failure is an exception EVR, not a leak
+    df = spark.range(10)
+    suite = ExpectationSuite("special_failure")
+    if case == "query_no_rows":
+        etype = "expect_query_to_return_no_rows"
+        suite.add(etype, query="SELECT assert_true(id < 3) FROM range(10)")
+    else:
+        etype = "expect_column_values_to_exist_in"
+        ref = spark.range(10).select(_fails_on_seven(F.col("id")).alias("id"))
+        suite.add(etype, column="id", ref=ref)
+    mark = _rdd_mark(spark)
+    before = _session_caches(spark, mark)
+    res = SparkValidationEngine(spark).validate(df, suite)
+    assert [r.expectation_config["expectation_type"] for r in _raised(res)] == [etype]
+    assert _session_caches(spark, mark) == before

@@ -9,7 +9,7 @@ sample-based one; everything else must match.
 
 import pytest
 
-from golden_harness import SkipCase, iter_cases, run_case
+from golden_harness import SkipCase, iter_cases, require_corpus, run_case
 
 # (expectation_type, title) -> reason we intentionally diverge.
 # EMPTY since round 2: the bootstrapped-KS expectation now runs the
@@ -22,6 +22,8 @@ DIVERGENT_CASES: dict = {}
 @pytest.mark.golden
 def test_reference_golden_corpus(spark):
     from great_expectations_spark.engine import SparkValidationEngine
+
+    require_corpus()
 
     engine = SparkValidationEngine(spark)
     passed = failed = skipped = divergent = 0

@@ -22,7 +22,7 @@ passes); a failure OUTSIDE the list is a regression.
 
 import pytest
 
-from golden_harness import SkipCase, iter_excluded_cases, run_case
+from golden_harness import SkipCase, iter_excluded_cases, require_corpus, run_case
 
 # (expectation_type, title) -> why this case is inherently non-Spark.
 _TYPE_VOCAB = (
@@ -194,6 +194,8 @@ ENGINE_SPECIFIC = {
 @pytest.mark.golden
 def test_reference_golden_excluded_cases(spark):
     from great_expectations_spark.engine import SparkValidationEngine
+
+    require_corpus()
 
     engine = SparkValidationEngine(spark)
     passed = skipped = tolerated = 0
