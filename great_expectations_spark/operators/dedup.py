@@ -720,13 +720,6 @@ def duplicate_clusters(
         .distinct()
         .persist()
     )
-    labels = (
-        edges.select(F.col("src").alias("node"))
-        .union(edges.select(F.col("dst").alias("node")))
-        .distinct()
-        .select(F.col("node"), F.col("node").alias("cluster_id"))
-        .localCheckpoint()
-    )
 
     def _fingerprint(lab: DataFrame) -> int:
         # bit_xor, not sum: ANSI mode raises on long-sum overflow, and xor
@@ -736,64 +729,89 @@ def duplicate_clusters(
         ).collect()[0]
         return int(row["h"] or 0)
 
-    fp = _fingerprint(labels)
+    # every local checkpoint but the returned labels is released as soon as
+    # it is superseded, and the labels too when the call raises
+    labels = propagated = None
     converged = False
-    iterations = 0
-    for _ in range(max_iterations):
-        iterations += 1
-        msgs = (
-            edges.join(labels, edges["src"] == labels["node"])
-            .select(F.col("dst").alias("node"), F.col("cluster_id"))
-            .union(
-                edges.join(labels, edges["dst"] == labels["node"]).select(
-                    F.col("src").alias("node"), F.col("cluster_id")
+    try:
+        labels = (
+            edges.select(F.col("src").alias("node"))
+            .union(edges.select(F.col("dst").alias("node")))
+            .distinct()
+            .select(F.col("node"), F.col("node").alias("cluster_id"))
+            .localCheckpoint()
+        )
+        fp = _fingerprint(labels)
+        iterations = 0
+        for _ in range(max_iterations):
+            iterations += 1
+            msgs = (
+                edges.join(labels, edges["src"] == labels["node"])
+                .select(F.col("dst").alias("node"), F.col("cluster_id"))
+                .union(
+                    edges.join(labels, edges["dst"] == labels["node"]).select(
+                        F.col("src").alias("node"), F.col("cluster_id")
+                    )
                 )
+                .union(labels)
             )
-            .union(labels)
-        )
-        propagated = (
-            msgs.groupBy("node")
-            .agg(F.min("cluster_id").alias("cluster_id"))
-            # checkpoint BEFORE the jump self-join: the two join sides hash
-            # on different keys (cluster_id vs node), so without a
-            # materialization the groupBy subtree would run twice
-            .localCheckpoint()
-        )
-        # pointer jump: every label is itself a node id, so adopt the
-        # label's label (left+coalesce is defensive; the join always hits)
-        ptr = propagated.select(
-            F.col("node").alias("_ptr"), F.col("cluster_id").alias("_ptr_label")
-        )
-        new_labels = (
-            propagated.join(ptr, propagated["cluster_id"] == ptr["_ptr"], "left")
-            .select(
-                "node",
-                F.coalesce(F.col("_ptr_label"), F.col("cluster_id")).alias(
-                    "cluster_id"
-                ),
+            propagated = (
+                msgs.groupBy("node")
+                .agg(F.min("cluster_id").alias("cluster_id"))
+                # checkpoint BEFORE the jump self-join: the two join sides
+                # hash on different keys (cluster_id vs node), so without a
+                # materialization the groupBy subtree would run twice
+                .localCheckpoint()
             )
-            .localCheckpoint()
-        )
-        new_fp = _fingerprint(new_labels)
-        labels = new_labels
-        if new_fp == fp:
-            converged = True
-            break
-        fp = new_fp
-    edges.unpersist()
-    if stats is not None:
-        stats["iterations"] = iterations
-        stats["converged"] = converged
-    if not converged:
-        # propagation needs O(component diameter) rounds; a silent stop
-        # would return WRONG cluster ids for the unconverged components
-        raise ValueError(
-            f"duplicate_clusters did not converge in {max_iterations} "
-            "iterations — the pair graph has a component with diameter "
-            f"> {max_iterations} (unusual for LSH near-dup graphs, which "
-            "are near-cliques); raise max_iterations"
-        )
+            # pointer jump: every label is itself a node id, so adopt the
+            # label's label (left+coalesce is defensive; the join always hits)
+            ptr = propagated.select(
+                F.col("node").alias("_ptr"), F.col("cluster_id").alias("_ptr_label")
+            )
+            new_labels = (
+                propagated.join(ptr, propagated["cluster_id"] == ptr["_ptr"], "left")
+                .select(
+                    "node",
+                    F.coalesce(F.col("_ptr_label"), F.col("cluster_id")).alias(
+                        "cluster_id"
+                    ),
+                )
+                .localCheckpoint()
+            )
+            _release_local_checkpoint(propagated)
+            _release_local_checkpoint(labels)
+            labels, propagated = new_labels, None
+            new_fp = _fingerprint(labels)
+            if new_fp == fp:
+                converged = True
+                break
+            fp = new_fp
+        if stats is not None:
+            stats["iterations"] = iterations
+            stats["converged"] = converged
+        if not converged:
+            # propagation needs O(component diameter) rounds; a silent stop
+            # would return WRONG cluster ids for the unconverged components
+            raise ValueError(
+                f"duplicate_clusters did not converge in {max_iterations} "
+                "iterations — the pair graph has a component with diameter "
+                f"> {max_iterations} (unusual for LSH near-dup graphs, which "
+                "are near-cliques); raise max_iterations"
+            )
+    finally:
+        edges.unpersist()
+        for frame in (propagated, None if converged else labels):
+            if frame is not None:
+                _release_local_checkpoint(frame)
     return labels
+
+
+def _release_local_checkpoint(df: DataFrame) -> None:
+    """Drop the blocks behind a ``localCheckpoint()`` frame.
+    ``DataFrame.unpersist()`` does not reach them: the checkpointed RDD sits
+    under the frame's plan, not in the cache manager, and would otherwise
+    stay persisted until the JVM collects it."""
+    df._jdf.queryExecution().analyzed().rdd().unpersist(True)
 
 
 def dedup_by_clusters(

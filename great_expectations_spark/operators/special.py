@@ -68,24 +68,30 @@ def _compile_exist_in(planner: Any, cfg: ExpectationConfiguration) -> None:
         """One anti-join job computes the global violation count, the
         per-partition counts (groupBy over the violation rows — tiny), and
         the sample; decisions (global + every partition) read from here."""
+        if "error" in state:
+            # the reference query failed once: every later decision (the
+            # global one and each partition's) fails the same way without
+            # running the anti-join again
+            raise state["error"]
         if state:
             return
-        ref = _resolve_ref(planner, kw)
-        keys = ref.select(
-            *[F.col(rc).alias(f"__ref_{i}") for i, rc in enumerate(ref_columns)]
-        ).dropDuplicates()
-        if kw.get("broadcast"):
-            keys = F.broadcast(keys)
-        cond = None
-        for i, c in enumerate(columns):
-            eq = F.col(c) == F.col(f"__ref_{i}")
-            cond = eq if cond is None else (cond & eq)
-        base = planner.df.filter(dom & _all_not_null([F.col(c) for c in columns]))
-        violations = base.join(keys, on=cond, how="left_anti")
-        multi = bool(planner.partition_by) or rf["result_format"] != "BOOLEAN_ONLY"
-        if multi:
-            violations = violations.persist()
+        multi = False
         try:
+            ref = _resolve_ref(planner, kw)
+            keys = ref.select(
+                *[F.col(rc).alias(f"__ref_{i}") for i, rc in enumerate(ref_columns)]
+            ).dropDuplicates()
+            if kw.get("broadcast"):
+                keys = F.broadcast(keys)
+            cond = None
+            for i, c in enumerate(columns):
+                eq = F.col(c) == F.col(f"__ref_{i}")
+                cond = eq if cond is None else (cond & eq)
+            base = planner.df.filter(dom & _all_not_null([F.col(c) for c in columns]))
+            violations = base.join(keys, on=cond, how="left_anti")
+            multi = bool(planner.partition_by) or rf["result_format"] != "BOOLEAN_ONLY"
+            if multi:
+                violations = violations.persist()
             state["global"] = violations.count()
             if planner.partition_by:
                 rows = violations.groupBy(*planner.partition_by).count().collect()
@@ -101,6 +107,10 @@ def _compile_exist_in(planner: Any, cfg: ExpectationConfiguration) -> None:
                 else:
                     rows = violations.select(*columns).limit(n).collect()
                     state["sample"] = [json.dumps(list(r), default=str) for r in rows]
+        except Exception as e:
+            state.clear()
+            state["error"] = e
+            raise
         finally:
             if multi:
                 violations.unpersist()

@@ -79,6 +79,11 @@ from great_expectations_spark.operators.conditions import (
     compile_map_condition,
     translate_row_condition,
 )
+from great_expectations_spark.profiler import (
+    auto_history_key,
+    fetch_metric_histories,
+    resolve_auto,
+)
 
 COMPLETE_CAP = 10_000  # driver-side cap on COMPLETE unexpected_list
 DISTINCT_CAP = 65_536  # driver-side cap on collected distinct values
@@ -279,6 +284,7 @@ class SuitePlanner:
         self._items: list[_Item] = []
         self._deferred: list[Callable[[], None]] = []  # phase-2 compile (z-score)
         self._errors: list[tuple[ExpectationConfiguration, Exception]] = []
+        self._n_partitions = 1  # partitions the main pass found (run())
 
     # ---- registration helpers -------------------------------------------
 
@@ -381,11 +387,6 @@ class SuitePlanner:
         # the same keys), instead of one store scan per auto expectation
         auto_histories = None
         if self.metrics_store is not None:
-            from great_expectations_spark.profiler import (
-                auto_history_key,
-                fetch_metric_histories,
-            )
-
             auto_keys = []
             for cfg in self.suite.expectations:
                 if not cfg.kwargs.get("auto"):
@@ -419,14 +420,10 @@ class SuitePlanner:
                 if cfg.kwargs.get("auto"):
                     # reference validator.py:300-523: auto=True estimates the
                     # missing success parameters from the batch itself
-                    from great_expectations_spark.profiler import resolve_auto
-
                     cfg = ExpectationConfiguration(
                         expectation_type=t,
                         kwargs=resolve_auto(
-                            self.df, t, cfg.kwargs, store=self.metrics_store,
-                            suite_name=self.history_suite_name,
-                            histories=auto_histories,
+                            self.df, t, cfg.kwargs, histories=auto_histories
                         ),
                         meta=dict(cfg.meta),
                     )
@@ -872,7 +869,11 @@ class SuitePlanner:
                     (tuple(r[c] for c in need.cols), int(r["_cnt"]))
                     for r in top_rows[:DISTINCT_CAP]
                 ]
-            if need.want_dup_sample:
+            # a duplicate-free key (the happy path of a uniqueness check) has
+            # no duplicate sample and no duplicated row to attribute
+            if need.want_dup_sample and not (
+                need.want_dup_stats and out.dup_value_count == 0
+            ):
                 dup_rows = (
                     grouped.filter(F.col("_cnt") > 1)
                     .orderBy(F.desc("_cnt"), *[F.asc(c) for c in need.cols])
@@ -898,8 +899,7 @@ class SuitePlanner:
                     DISTINCT_CAP,
                     max(
                         64,
-                        PARTITION_TOP_BUDGET
-                        // getattr(self, "_n_partitions", 1),
+                        PARTITION_TOP_BUDGET // self._n_partitions,
                     ),
                 )
                 out.part_top_cap = per_part_cap
@@ -927,7 +927,7 @@ class SuitePlanner:
                     )
                 for pk_top in out.part_top.values():
                     pk_top.sort(key=lambda vc: (-vc[1], tuple(str(v) for v in vc[0])))
-            if need.want_dup_stats and self.partition_by:
+            if need.want_dup_stats and self.partition_by and out.dup_row_count:
                 # attribute globally-duplicated rows to their partitions:
                 # semi-join the (usually small) duplicate-value set back to
                 # the rows, then count per partition (one bounded shuffle;

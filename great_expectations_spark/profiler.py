@@ -6,9 +6,14 @@ machinery behind ``auto=True``, validator/validator.py:300-523).
 WHAT is reproduced: profile a batch once, emit an ExpectationSuite covering
 table shape, nullity, types, value domains, numeric/datetime ranges, and
 uniqueness — the same expectation families the reference's profiler emits.
-HOW is Spark-native: ONE bundled ``df.agg`` pass computes every per-column
-statistic (count/nulls/min/max/mean/distinct) for every column — not one job
-per metric per column like the reference's metric graph — plus one tiny
+HOW is Spark-native: every statistic here resolves through
+``rule_profiler``'s metric engine, the one resolver and metric vocabulary
+the rule-based profiler uses too. ``profile()`` computes every per-column
+statistic (count/nulls/min/max/mean, and the PII counts when asked) for
+every column in ONE bundled ``df.agg``, and the exact distinct counts in a
+second, isolated bundle (a count_distinct inside the shared bundle would
+re-key every other metric's buffer) — two jobs, not one per metric per
+column like the reference's metric graph — plus one tiny
 ``distinct().limit(k+1)`` probe per low-cardinality candidate to make the
 value-set decision exact.
 
@@ -27,43 +32,83 @@ Emission rules (deterministic given the data — the driver contract's
   (sorted observed set).
 - nonnull > 0 and distinct == nonnull → values_to_be_unique.
 
-``exact=True`` computes distinct counts exactly (multiple count_distincts in
-one agg — Spark rewrites via expand, cost ~ cols x rows; right for
-profiling-sized batches and required for oracle determinism).
-``exact=False`` gates on approx_count_distinct(rsd=0.01) + an exact
-``distinct().limit()`` probe only for in-set candidates — the 10^12-row
-path, same decisions w.h.p. without the expand.
+``exact=True`` computes distinct counts exactly (the isolated bundle's
+count_distincts — Spark rewrites them via expand, cost ~ cols x rows; right
+for profiling-sized batches and required for oracle determinism).
+``exact=False`` gates on approx_count_distinct(rsd=0.01), which rides the
+main bundle, + an exact ``distinct().limit()`` probe only for in-set
+candidates — the 10^12-row path, same decisions w.h.p. without the expand.
 """
 
 from __future__ import annotations
 
+import json
 import math
 from typing import Optional
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from great_expectations_spark.core.config import ExpectationSuite
+from great_expectations_spark.core.config import ExpectationSuite, deterministic_id
+from great_expectations_spark.functions.stats import bootstrap_range_estimate
+from great_expectations_spark.operators.conditions import translate_row_condition
+from great_expectations_spark.operators.partition import (
+    build_categorical_partition_object,
+    build_partition_object,
+)
+from great_expectations_spark.operators.text import pii_total
+from great_expectations_spark.rule_profiler import (
+    _AGG_METRICS,
+    _DISTINCT_METRICS,
+    _TEMPORAL,
+    ValueSetMultiBatchParameterBuilder,
+    _col_domain,
+    _is_numeric,
+    _metric_expr,
+    _percentile_routed,
+    _RuleMetricEngine,
+)
 
-_NUMERIC = ("tinyint", "smallint", "int", "bigint", "float", "double")
-_TEMPORAL = ("date", "timestamp", "timestamp_ntz")
-
-# expectation_type -> (aggregate builder, kwargs filler) for auto=True
-# parameter estimation (reference: validator.py:300-523 dispatches auto=True
-# through the rule-based profiler; here the estimate is the observed batch
-# statistic, resolved in ONE agg job per auto expectation)
-
-
-# auto=True numeric-bound expectation → the stored metric-key parts whose
-# cross-run history can bootstrap a RANGE estimate (metric keys are the
-# planner's _reg tuples, json-encoded by stores.write_metrics)
-_AUTO_HISTORY_KEYS: dict[str, tuple[str, ...]] = {
-    "expect_table_row_count_to_be_between": ("table.row_count",),
-    "expect_column_min_to_be_between": ("column.min",),
-    "expect_column_max_to_be_between": ("column.max",),
-    "expect_column_mean_to_be_between": ("column.mean",),
-    "expect_column_sum_to_be_between": ("column.sum",),
-    "expect_column_stdev_to_be_between": ("column.standard_deviation",),
+# auto=True expectation_type -> the rule_profiler._AGG_METRICS metrics whose
+# observed batch values fill (min_value, max_value) (reference:
+# validator.py:300-523 dispatches auto=True through the rule-based profiler)
+_AUTO_BOUNDS: dict[str, tuple[str, str]] = {
+    "expect_table_row_count_to_be_between": ("table.row_count",) * 2,
+    "expect_column_values_to_be_between": ("column.min", "column.max"),
+    "expect_column_min_to_be_between": ("column.min",) * 2,
+    "expect_column_max_to_be_between": ("column.max",) * 2,
+    "expect_column_mean_to_be_between": ("column.mean",) * 2,
+    "expect_column_median_to_be_between": ("column.median",) * 2,
+    "expect_column_stdev_to_be_between": ("column.standard_deviation",) * 2,
+    "expect_column_sum_to_be_between": ("column.sum",) * 2,
+    "expect_column_unique_value_count_to_be_between": (
+        "column.distinct_values.count",
+    ) * 2,
+    "expect_column_proportion_of_unique_values_to_be_between": (
+        "column.unique_proportion",
+    ) * 2,
+    "expect_column_value_lengths_to_be_between": (
+        "column.values.length.min",
+        "column.values.length.max",
+    ),
+}
+# bounds whose metric's stored cross-run history (the planner's _reg key,
+# json-encoded by stores.write_metrics) can bootstrap a RANGE estimate
+_HISTORY_TYPES = {
+    "expect_table_row_count_to_be_between",
+    "expect_column_min_to_be_between",
+    "expect_column_max_to_be_between",
+    "expect_column_mean_to_be_between",
+    "expect_column_sum_to_be_between",
+    "expect_column_stdev_to_be_between",
+}
+# auto=True types filled with the observed non-null value set
+_VALUE_SET_TYPES = {
+    "expect_column_values_to_be_in_set",
+    "expect_column_distinct_values_to_be_in_set",
+    "expect_column_distinct_values_to_contain_set",
+    "expect_column_distinct_values_to_equal_set",
 }
 
 
@@ -77,23 +122,16 @@ def auto_history_key(expectation_type: str, kwargs: dict) -> Optional[list[str]]
     the bare [metric, column] key holds the WHOLE-TABLE history, and
     bootstrapping a conditioned bound from it would pin the expectation to
     the wrong domain's range."""
-    key = _AUTO_HISTORY_KEYS.get(expectation_type)
-    if key is None:
+    if expectation_type not in _HISTORY_TYPES:
         return None
+    parts = [_AUTO_BOUNDS[expectation_type][0]]
     c = kwargs.get("column")
-    parts = list(key) + ([c] if c else [])
+    if c:
+        parts.append(c)
     rc = kwargs.get("row_condition")
     if rc:
-        from great_expectations_spark.core.config import deterministic_id
-
-        parts.append(
-            deterministic_id(
-                {
-                    "row_condition": rc,
-                    "condition_parser": kwargs.get("condition_parser", "spark"),
-                }
-            )
-        )
+        cp = kwargs.get("condition_parser", "spark")
+        parts.append(deterministic_id({"row_condition": rc, "condition_parser": cp}))
     return parts
 
 
@@ -105,22 +143,22 @@ def fetch_metric_histories(
 ) -> dict[str, list[float]]:
     """{json_key: [value per historical run]} for EVERY requested metric key
     in ONE Spark job (one grouped aggregation over the metrics table), not
-    one scan per key. ``suite_name`` scopes the history to one suite's runs
-    — without it a shared store root would mix histories from every suite
-    writing the same metric key (e.g. two tables' ``table.row_count``),
-    bootstrapping bounds from the WRONG table's volumes. Max-per-(run, key)
-    collapses retried appends, as in volume_assistant. Keys with fewer than
-    ``min_runs`` usable runs are omitted. The collect is one row per
-    (key, run) — bounded by run count, not data size."""
-    import json as _json
-
+    one scan per key — the one reader of the metrics table here.
+    ``suite_name`` scopes the history to one suite's runs — without it a
+    shared store root would mix histories from every suite writing the same
+    metric key (e.g. two tables' ``table.row_count``), bootstrapping bounds
+    from the WRONG table's volumes. Max-per-(run, key) collapses retried
+    appends: the store is append-only, so a retried run can have written
+    the same row twice. Keys with fewer than ``min_runs`` usable runs are
+    omitted. The collect is one row per (key, run) — bounded by run count,
+    not data size."""
     if not keys:
         return {}
     try:
         metrics = store.read_metrics()
     except Exception:
         return {}
-    wanted = [_json.dumps(list(k)) for k in keys]
+    wanted = [json.dumps(list(k)) for k in keys]
     m = metrics.filter(
         F.col("metric_key").isin(wanted) & F.col("partition_key").isNull()
     )
@@ -130,20 +168,12 @@ def fetch_metric_histories(
         F.max(F.col("value").try_cast("double")).alias("_v")
     )
     out: dict[str, list[float]] = {}
-    for r in per_run.collect():
+    # in run-id order: the grouped rows arrive in any order, and a seeded
+    # bootstrap over the history must see the same sequence every time
+    for r in sorted(per_run.collect(), key=lambda r: str(r["run_id"])):
         if r["_v"] is not None:
             out.setdefault(r["metric_key"], []).append(r["_v"])
     return {k: v for k, v in out.items() if len(v) >= min_runs}
-
-
-def _metric_history(
-    store, key_parts: list, min_runs: int, suite_name: Optional[str] = None
-) -> Optional[list[float]]:
-    """Single-key convenience wrapper over fetch_metric_histories."""
-    import json as _json
-
-    got = fetch_metric_histories(store, [list(key_parts)], min_runs, suite_name)
-    return got.get(_json.dumps(list(key_parts)))
 
 
 def resolve_auto(
@@ -161,7 +191,9 @@ def resolve_auto(
     """Fill missing success parameters of an ``auto=True`` expectation.
 
     With ``store=None`` (or no usable history) the estimate is the observed
-    batch statistic — point bounds from ONE batch, the round-2 behavior.
+    batch statistic — point bounds from ONE batch, resolved by
+    rule_profiler's metric engine (``_AUTO_BOUNDS`` names the metric behind
+    each bound; exact median/quantiles follow the engine's scale rule).
 
     With a metrics ``store`` holding >= ``min_runs`` historical runs of the
     expectation's metric, numeric bounds come from the multi-batch BOOTSTRAP
@@ -177,129 +209,71 @@ def resolve_auto(
     would bootstrap bounds from other tables' volumes). ``histories`` is an
     optional pre-fetched {json_key: values} map (fetch_metric_histories) so
     a suite with many auto expectations costs ONE history job, not one per
-    expectation.
+    expectation; ``store`` is not read when it is given.
 
     Returns new kwargs with ``auto`` removed and bounds filled; raises for
     types without an auto rule."""
-    import json as _json
-
     kw = {k: v for k, v in kwargs.items() if k != "auto"}
-    c = kw.get("column")
-    col = F.col(c) if c else None
+    t, domain = expectation_type, _col_domain(kw.get("column"))
     rc = kw.get("row_condition")
     if rc:
         # estimate from the SAME domain validation will measure (reference
         # metrics carry row_condition in their domain kwargs); the history
         # key carries the row_condition id (auto_history_key), matching the
         # rc-suffixed _reg key the planner stores conditioned values under
-        from great_expectations_spark.operators.conditions import (
-            translate_row_condition,
-        )
+        df = df.filter(translate_row_condition(rc, kw.get("condition_parser", "spark")))
+    engine = _RuleMetricEngine([df])
 
-        df = df.filter(
-            translate_row_condition(rc, kw.get("condition_parser", "spark"))
-        )
-
-    def _try_history_bounds() -> bool:
-        parts = auto_history_key(expectation_type, kwargs)
-        if parts is None or (store is None and histories is None):
-            return False
-        if histories is not None:
-            vals = histories.get(_json.dumps(parts))
-        else:
-            vals = _metric_history(store, parts, min_runs, suite_name)
-        if vals is None:
-            return False
-        from great_expectations_spark.functions.stats import (
-            bootstrap_range_estimate,
-        )
-
-        lo, hi = bootstrap_range_estimate(
-            vals,
-            false_positive_rate=false_positive_rate,
-            n_resamples=n_resamples,
-            seed=seed,
-        )
-        if expectation_type == "expect_table_row_count_to_be_between":
-            lo, hi = int(math.floor(lo)), int(math.ceil(hi))
-        if kw.get("min_value") is None:
-            kw["min_value"] = lo
-        if kw.get("max_value") is None:
-            kw["max_value"] = hi
-        return True
-
-    def fill_bounds(min_expr, max_expr):
-        need_min = kw.get("min_value") is None
-        need_max = kw.get("max_value") is None
-        if not (need_min or need_max):
-            return
-        if _try_history_bounds():
-            return
-        row = df.agg(min_expr.alias("_mn"), max_expr.alias("_mx")).collect()[0]
-        if need_min:
-            kw["min_value"] = row["_mn"]
-        if need_max:
-            kw["max_value"] = row["_mx"]
-
-    t = expectation_type
-    if t == "expect_table_row_count_to_be_between":
-        fill_bounds(F.count(F.lit(1)), F.count(F.lit(1)))
-    elif t in (
-        "expect_column_values_to_be_between",
-        "expect_column_min_to_be_between",
-        "expect_column_max_to_be_between",
-    ):
-        fill_bounds(F.min(col), F.max(col))
-    elif t == "expect_column_mean_to_be_between":
-        fill_bounds(F.avg(col), F.avg(col))
-    elif t == "expect_column_median_to_be_between":
-        m = F.expr(f"percentile(`{c}`, 0.5)")
-        fill_bounds(m, m)
-    elif t == "expect_column_stdev_to_be_between":
-        fill_bounds(F.stddev_samp(col), F.stddev_samp(col))
-    elif t == "expect_column_sum_to_be_between":
-        fill_bounds(F.sum(col), F.sum(col))
-    elif t == "expect_column_unique_value_count_to_be_between":
-        fill_bounds(F.count_distinct(col), F.count_distinct(col))
-    elif t == "expect_column_proportion_of_unique_values_to_be_between":
-        p = F.count_distinct(col) / F.count(col)
-        fill_bounds(p, p)
-    elif t == "expect_column_value_lengths_to_be_between":
-        fill_bounds(F.min(F.length(col)), F.max(F.length(col)))
-    elif t in (
-        "expect_column_values_to_be_in_set",
-        "expect_column_distinct_values_to_be_in_set",
-        "expect_column_distinct_values_to_contain_set",
-        "expect_column_distinct_values_to_equal_set",
-    ):
+    if t in _VALUE_SET_TYPES:
         if kw.get("value_set") is None:
-            rows = df.select(c).filter(col.isNotNull()).distinct().limit(10_001).collect()
-            if len(rows) > 10_000:
-                raise ValueError(
-                    f"auto value_set for {c!r}: cardinality exceeds 10000"
-                )
-            kw["value_set"] = sorted(
-                (r[0] for r in rows), key=lambda v: (str(type(v).__name__), str(v))
-            )
-    elif t == "expect_column_quantile_values_to_be_between":
+            kw["value_set"] = ValueSetMultiBatchParameterBuilder(
+                "auto", max_cardinality=10_000
+            ).build(engine, domain, {})["value"]
+        return kw
+
+    if t == "expect_column_quantile_values_to_be_between":
         ranges = kw.get("quantile_ranges") or {}
         quantiles = ranges.get("quantiles") or [0.25, 0.5, 0.75]
         if ranges.get("value_ranges") is None:
-            qs = ", ".join(str(q) for q in quantiles)
-            row = df.agg(
-                F.expr(f"percentile(`{c}`, array({qs}))").alias("_q")
-            ).collect()[0]
+            for i, q in enumerate(quantiles):
+                engine.request(f"q{i}", _percentile_routed(kw["column"], q))
+            engine.resolve()
             kw["quantile_ranges"] = {
                 "quantiles": quantiles,
-                "value_ranges": [[v, v] for v in row["_q"]],
+                "value_ranges": [
+                    [engine.history(f"q{i}")[0]] * 2 for i in range(len(quantiles))
+                ],
             }
-    else:
+        return kw
+
+    bounds = _AUTO_BOUNDS.get(t)
+    if bounds is None:
         raise ValueError(f"auto=True is not supported for {t}")
+    need = {
+        k: m for k, m in zip(("min_value", "max_value"), bounds) if kw.get(k) is None
+    }
+    if not need:
+        return kw
+    parts = auto_history_key(t, kwargs)
+    if parts is not None and histories is None and store is not None:
+        histories = fetch_metric_histories(store, [parts], min_runs, suite_name)
+    vals = None if parts is None else (histories or {}).get(json.dumps(parts))
+    if vals is None:
+        for m in need.values():
+            engine.request(m, _metric_expr(m, domain), distinct=m in _DISTINCT_METRICS)
+        engine.resolve()
+        kw.update({k: engine.history(m)[0] for k, m in need.items()})
+        return kw
+    lo, hi = bootstrap_range_estimate(
+        vals,
+        false_positive_rate=false_positive_rate,
+        n_resamples=n_resamples,
+        seed=seed,
+    )
+    if bounds[0] == "table.row_count":
+        lo, hi = int(math.floor(lo)), int(math.ceil(hi))
+    kw.update({k: v for k, v in (("min_value", lo), ("max_value", hi)) if k in need})
     return kw
-
-
-def _is_numeric(dt: str) -> bool:
-    return dt in _NUMERIC or dt.startswith("decimal")
 
 
 def profile(
@@ -324,31 +298,58 @@ def profile(
     Opt-in because each baseline costs one extra bounded pass per column and
     the default emission rules are oracle-pinned by the driver contract.
 
-    ``pii_checks=True`` scans string columns in one extra bundled aggregate
-    and emits ``expect_column_values_to_not_contain_pii`` for columns that
-    are PII-free in this batch (or nearly so, with the same mostly floor as
-    the null rule) — a privacy gate bootstrapped from observed data.
-    Opt-in for the same oracle-pinning reason."""
+    ``pii_checks=True`` adds a PII-hit count per string column to the
+    bundled aggregate and emits ``expect_column_values_to_not_contain_pii``
+    for columns that are PII-free in this batch (or nearly so, with the same
+    mostly floor as the null rule) — a privacy gate bootstrapped from
+    observed data. Opt-in for the same oracle-pinning reason."""
     cols = columns or df.columns
     dtypes = {f.name: f.dataType.simpleString() for f in df.schema.fields}
+    str_cols = [c for c in cols if dtypes[c] == "string"] if pii_checks else []
+    # the range expectations pinned at the observed value: numeric min, max
+    # and mean, temporal min and max — each the one-batch auto=True rule of
+    # its type, so each reads its _AUTO_BOUNDS metric
+    pins = {
+        c: ["expect_column_min_to_be_between", "expect_column_max_to_be_between"]
+        + (["expect_column_mean_to_be_between"] if _is_numeric(dtypes[c]) else [])
+        for c in cols
+        if _is_numeric(dtypes[c]) or dtypes[c] in _TEMPORAL
+    }
 
-    aggs = [F.count(F.lit(1)).alias("__n")]
+    engine = _RuleMetricEngine([df])
+    engine.request("__n", _AGG_METRICS["table.row_count"](None))
     for c in cols:
-        col = F.col(c)
-        aggs.append(F.count(col).alias(f"nn__{c}"))
-        if exact:
-            aggs.append(F.count_distinct(col).alias(f"dc__{c}"))
-        else:
-            aggs.append(F.approx_count_distinct(col, rsd=0.01).alias(f"dc__{c}"))
-        if _is_numeric(dtypes[c]) or dtypes[c] in _TEMPORAL:
-            aggs.append(F.min(col).alias(f"mn__{c}"))
-            aggs.append(F.max(col).alias(f"mx__{c}"))
-        if _is_numeric(dtypes[c]):
-            aggs.append(F.avg(col).alias(f"av__{c}"))
-    stats = df.agg(*aggs).collect()[0].asDict()
-    n = int(stats["__n"])
+        engine.request(f"nn__{c}", F.count(F.col(c)))
+        dc = (
+            _AGG_METRICS["column.distinct_values.count"](c)
+            if exact
+            else F.approx_count_distinct(F.col(c), rsd=0.01)
+        )
+        engine.request(f"dc__{c}", dc, distinct=exact)
+        for t in pins.get(c, ()):
+            m = _AUTO_BOUNDS[t][0]
+            engine.request(f"{m}__{c}", _AGG_METRICS[m](c))
+    for c in str_cols:
+        engine.request(
+            f"pii__{c}", F.sum(F.when(pii_total(F.col(c)) > 0, 1).otherwise(0))
+        )
+    engine.resolve()
 
+    def stat(alias: str):
+        return engine.history(alias)[0]
+
+    n = int(stat("__n"))
     suite = ExpectationSuite(name=name)
+
+    def add_mostly(expectation_type: str, c: str, frac: float) -> None:
+        # frac of the considered rows fail: none → a plain expectation, up
+        # to mostly_floor → one with mostly floored to two decimals
+        if frac == 0.0:
+            suite.add(expectation_type, column=c)
+        elif frac <= mostly_floor:
+            mostly = math.floor((1 - frac) * 100) / 100
+            suite.add(expectation_type, column=c, mostly=mostly)
+
     suite.add("expect_table_columns_to_match_ordered_list", column_list=list(df.columns))
     suite.add(
         "expect_table_row_count_to_be_between",
@@ -358,37 +359,15 @@ def profile(
 
     for c in cols:
         dt = dtypes[c]
-        nonnull = int(stats[f"nn__{c}"] or 0)
-        distinct = int(stats[f"dc__{c}"] or 0)
+        nonnull = int(stat(f"nn__{c}") or 0)
+        distinct = int(stat(f"dc__{c}") or 0)
         suite.add("expect_column_values_to_be_of_type", column=c, type_=dt)
         null_frac = (n - nonnull) / n if n else 0.0
-        if null_frac == 0.0:
-            suite.add("expect_column_values_to_not_be_null", column=c)
-        elif null_frac <= mostly_floor:
-            suite.add(
-                "expect_column_values_to_not_be_null",
-                column=c,
-                mostly=math.floor((1 - null_frac) * 100) / 100,
-            )
-        if _is_numeric(dt) and nonnull:
-            mn, mx, av = stats[f"mn__{c}"], stats[f"mx__{c}"], stats[f"av__{c}"]
-            suite.add(
-                "expect_column_min_to_be_between", column=c, min_value=mn, max_value=mn
-            )
-            suite.add(
-                "expect_column_max_to_be_between", column=c, min_value=mx, max_value=mx
-            )
-            suite.add(
-                "expect_column_mean_to_be_between", column=c, min_value=av, max_value=av
-            )
-        elif dt in _TEMPORAL and nonnull:
-            mn, mx = stats[f"mn__{c}"], stats[f"mx__{c}"]
-            suite.add(
-                "expect_column_min_to_be_between", column=c, min_value=mn, max_value=mn
-            )
-            suite.add(
-                "expect_column_max_to_be_between", column=c, min_value=mx, max_value=mx
-            )
+        add_mostly("expect_column_values_to_not_be_null", c, null_frac)
+        if nonnull:
+            for t in pins.get(c, ()):
+                v = stat(f"{_AUTO_BOUNDS[t][0]}__{c}")
+                suite.add(t, column=c, min_value=v, max_value=v)
         # value-set: gate on the (possibly approx) distinct count, decide
         # exactly with a bounded probe — never collects an unbounded set
         emitted_in_set = False
@@ -413,11 +392,6 @@ def profile(
         if nonnull and distinct == nonnull:
             suite.add("expect_column_values_to_be_unique", column=c)
         if drift_baselines and nonnull:
-            from great_expectations_spark.operators.partition import (
-                build_categorical_partition_object,
-                build_partition_object,
-            )
-
             po = None
             if emitted_in_set:
                 po = build_categorical_partition_object(df, c)
@@ -431,36 +405,16 @@ def profile(
                     threshold=kl_threshold,
                 )
 
-    if pii_checks:
-        from great_expectations_spark.operators.text import pii_total
-
-        str_cols = [c for c in cols if dtypes[c] == "string"]
-        if str_cols and n:
-            pii_stats = df.agg(
-                *[
-                    F.sum(
-                        F.when(pii_total(F.col(c)) > 0, 1).otherwise(0)
-                    ).alias(f"pii__{c}")
-                    for c in str_cols
-                ]
-            ).collect()[0].asDict()
-            for c in str_cols:
-                # denominator = NON-NULL rows: the expectation's considered
-                # set excludes nulls (conditions._col_map default), unlike
-                # the not_be_null rule where every row is considered — using
-                # n here would emit a mostly the profiled batch itself fails
-                nonnull = int(stats[f"nn__{c}"] or 0)
-                if not nonnull:
-                    continue
-                hit_frac = int(pii_stats[f"pii__{c}"] or 0) / nonnull
-                if hit_frac == 0.0:
-                    suite.add("expect_column_values_to_not_contain_pii", column=c)
-                elif hit_frac <= mostly_floor:
-                    suite.add(
-                        "expect_column_values_to_not_contain_pii",
-                        column=c,
-                        mostly=math.floor((1 - hit_frac) * 100) / 100,
-                    )
+    for c in str_cols:
+        # denominator = NON-NULL rows: the expectation's considered set
+        # excludes nulls (conditions._col_map default), unlike the
+        # not_be_null rule where every row is considered — using n here
+        # would emit a mostly the profiled batch itself fails (an empty
+        # batch has no non-null rows, so it emits nothing)
+        nonnull = int(stat(f"nn__{c}") or 0)
+        if nonnull:
+            hits = int(stat(f"pii__{c}") or 0)
+            add_mostly("expect_column_values_to_not_contain_pii", c, hits / nonnull)
     return suite
 
 
@@ -478,49 +432,37 @@ def volume_assistant(
     numeric-range estimator → expect_table_row_count_to_be_between).
 
     Reads the global ``table.row_count`` rows this engine's stores layer
-    persists per run (sources/stores.py write_metrics), takes the empirical
-    ``quantiles`` of the historical counts, and emits one
-    expect_table_row_count_to_be_between with those bounds. One small
-    aggregate over the metrics table; the history is one row per run, so
-    the driver-side collect is bounded by run count.
+    persists per run (sources/stores.py write_metrics) through
+    fetch_metric_histories — one value per run — takes the empirical
+    ``quantiles`` of the historical counts (numpy's ``inverted_cdf``, which
+    equals Spark's ``percentile_approx`` at accuracy 10000 on histories of
+    fewer than 10000 runs), and emits one
+    expect_table_row_count_to_be_between with those bounds. The driver-side
+    collect is bounded by run count.
     """
     lo_q, hi_q = quantiles
     if not (0.0 <= lo_q < hi_q <= 1.0):
         raise ValueError("quantiles must satisfy 0 <= lo < hi <= 1")
-    try:
-        metrics = store.read_metrics()
-    except Exception:
-        # no metrics table yet — same guard as the store's own readers
-        raise ValueError(
-            f"volume_assistant needs >= {min_runs} historical runs, found 0"
-        )
-    m = metrics.filter(
-        (F.col("metric_key") == '["table.row_count"]')
-        & F.col("partition_key").isNull()
+    key = ["table.row_count"]
+    counts = fetch_metric_histories(store, [key], 0, suite_name).get(
+        json.dumps(key), []
     )
-    if suite_name is not None:
-        m = m.filter(F.col("suite_name") == suite_name)
-    # one value PER RUN: the store is append-only, so a retried run can have
-    # appended the same row twice — raw rows would double-weight it
-    per_run = m.groupBy("run_id").agg(
-        F.max(F.col("value").cast("bigint")).alias("_rc")
-    )
-    row = per_run.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.expr(f"percentile_approx(_rc, array({lo_q}, {hi_q}), 10000)").alias("q"),
-    ).collect()[0]
-    if int(row["n"] or 0) < min_runs:
+    if len(counts) < min_runs:
         raise ValueError(
-            f"volume_assistant needs >= {min_runs} historical runs, found {row['n']}"
+            f"volume_assistant needs >= {min_runs} historical runs, found {len(counts)}"
         )
-    lo, hi = int(math.floor(row["q"][0])), int(math.ceil(row["q"][1]))
+    lo, hi = np.quantile(counts, [lo_q, hi_q], method="inverted_cdf")
     suite = ExpectationSuite(
         name=name,
         meta={
             "assistant": "volume",
-            "history_runs": int(row["n"]),
+            "history_runs": len(counts),
             "quantiles": [lo_q, hi_q],
         },
     )
-    suite.add("expect_table_row_count_to_be_between", min_value=lo, max_value=hi)
+    suite.add(
+        "expect_table_row_count_to_be_between",
+        min_value=int(math.floor(lo)),
+        max_value=int(math.ceil(hi)),
+    )
     return suite

@@ -454,6 +454,29 @@ def test_duplicate_clusters_long_chain_louds_or_converges(spark):
         duplicate_clusters(chain, max_iterations=2)
 
 
+def test_duplicate_clusters_releases_its_checkpoints(spark):
+    """Each round's local checkpoints are released once superseded: a
+    converged call leaves only the returned labels persisted, a call that
+    does not converge leaves nothing (the chain used to leave 2 per round
+    plus 1)."""
+    from test_planner_lifecycle import _persistent_rdds, _rdd_mark
+
+    from great_expectations_spark.operators.dedup import duplicate_clusters
+
+    chain = spark.createDataFrame([(i, i + 1) for i in range(40)], ["a", "b"])
+    mark = _rdd_mark(spark)
+    stats = {}
+    labels = duplicate_clusters(chain, max_iterations=10, stats=stats)
+    assert stats["iterations"] > 1
+    assert _persistent_rdds(spark, mark) <= 1
+    assert labels.count() == 41 and labels.agg(F.max("cluster_id")).first()[0] == 0
+
+    mark = _rdd_mark(spark)
+    with pytest.raises(ValueError, match="did not converge"):
+        duplicate_clusters(chain, max_iterations=2)
+    assert _persistent_rdds(spark, mark) == 0
+
+
 def test_similarity_zero_norm_and_null_embeddings(spark):
     """Zero-norm embeddings (failed-embedding artifacts) must not crash under
     ANSI mode: they drop out of top-k/pairs; nulls get IVF list -1; a

@@ -361,3 +361,57 @@ def test_special_pass_failure_releases_its_cache(spark, case):
     res = SparkValidationEngine(spark).validate(df, suite)
     assert [r.expectation_config["expectation_type"] for r in _raised(res)] == [etype]
     assert _session_caches(spark, mark) == before
+
+
+@pytest.mark.parametrize("result_format", ["BOOLEAN_ONLY", "SUMMARY"])
+def test_exist_in_reference_failure_runs_once(spark, result_format):
+    # a reference query that fails is an exception EVR for the global
+    # verdict and for each partition's, and it runs once: every later
+    # decider re-raises the first failure instead of re-running the
+    # anti-join (8 jobs when each of the 6 deciders retried it)
+    df = spark.range(50).withColumn("p", F.col("id") % 5)
+    ref = spark.range(10).select(_fails_on_seven(F.col("id")).alias("id"))
+    suite = ExpectationSuite("exist_in_failure")
+    suite.add("expect_column_values_to_exist_in", column="id", ref=ref)
+    eng = SparkValidationEngine(spark)
+    got = []
+    n = _job_count(
+        spark,
+        lambda: got.append(
+            eng.validate(df, suite, result_format=result_format, partition_by=["p"])
+        ),
+    )
+    (res,) = got
+    failed = _raised(res) + [
+        r for r in res.partition_results if (r.exception_info or {}).get("raised_exception")
+    ]
+    assert len(failed) == 6 and len(res.partition_results) == 5
+    assert all("row 7" in r.exception_info["exception_message"] for r in failed)
+    assert n == 3
+
+
+@pytest.mark.parametrize("result_format", ["BOOLEAN_ONLY", "SUMMARY"])
+def test_duplicate_free_key_skips_groupby_attribution(spark, lineitem, result_format):
+    # a unique column under partition_by: the duplicate stats show no
+    # duplicate, so neither the duplicate sample nor the per-partition
+    # semi-join runs (8 jobs when both ran)
+    df = lineitem.withColumn("uid", F.monotonically_increasing_id())
+    suite = ExpectationSuite("unique_budget")
+    suite.add("expect_column_values_to_be_unique", column="uid")
+    suite.add("expect_column_values_to_be_between", column="l_quantity", min_value=0, max_value=100)
+    eng = SparkValidationEngine(spark)
+    got = []
+    n = _job_count(
+        spark,
+        lambda: got.append(
+            eng.validate(df, suite, result_format=result_format, partition_by=["l_linestatus"])
+        ),
+    )
+    (res,) = got
+    assert res.success and not _raised(res)
+    unique = [
+        r for r in res.partition_results
+        if r.expectation_config["expectation_type"] == "expect_column_values_to_be_unique"
+    ]
+    assert unique and all(r.success for r in unique)
+    assert n == 6

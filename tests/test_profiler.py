@@ -7,6 +7,16 @@ from great_expectations_spark.engine import SparkValidationEngine
 from great_expectations_spark.profiler import profile
 
 
+class _MetricsTable:
+    """A metrics store serving a prepared metrics-table DataFrame."""
+
+    def __init__(self, metrics):
+        self.metrics = metrics
+
+    def read_metrics(self):
+        return self.metrics
+
+
 def _by_type(suite):
     out = {}
     for cfg in suite.expectations:
@@ -476,3 +486,88 @@ def test_auto_history_with_parameterized_column(spark, tmp_path):
     # a RANGE from the 3-run history, not a point pin to today's 33.0
     assert kw["min_value"] < kw["max_value"]
     assert kw["min_value"] < 31 and kw["max_value"] > 35
+
+
+def test_auto_min_and_max_bound_their_own_metric(spark):
+    """auto=True min_to_be_between is a point bound on the batch minimum
+    (its metric is column.min) and max_to_be_between one on the maximum;
+    neither gets the [min, max] value range."""
+    from great_expectations_spark.core.config import ExpectationSuite
+    from great_expectations_spark.profiler import resolve_auto
+
+    df = spark.createDataFrame([(3.0,), (7.5,), (11.0,)], ["v"])
+    suite = ExpectationSuite(name="auto_min_max")
+    suite.add("expect_column_min_to_be_between", column="v", auto=True)
+    suite.add("expect_column_max_to_be_between", column="v", auto=True)
+    res = SparkValidationEngine(spark).validate(df, suite)
+    assert res.success
+    mn, mx = (r.expectation_config["kwargs"] for r in res.results)
+    assert mn["min_value"] == mn["max_value"] == 3.0
+    assert mx["min_value"] == mx["max_value"] == 11.0
+    # a bound the caller gave is kept; only the missing one is filled
+    kw = resolve_auto(
+        df, "expect_column_min_to_be_between", {"column": "v", "auto": True, "min_value": 0}
+    )
+    assert (kw["min_value"], kw["max_value"]) == (0, 3.0)
+
+
+def test_volume_assistant_quantiles_match_spark_percentile_approx(spark):
+    """volume_assistant's quantiles of the run history equal Spark's
+    percentile_approx(..., 10000) on the same per-run counts, ties and
+    two-run histories included."""
+    import json
+
+    import numpy as np
+    from pyspark.sql import functions as F
+
+    from great_expectations_spark.profiler import volume_assistant
+    from great_expectations_spark.sources.stores import METRICS_SCHEMA
+
+    rng = np.random.default_rng(11)
+    histories = {
+        f"h{n}": rng.integers(95, 106, size=n).tolist() for n in (2, 3, 4, 7, 10, 31, 60)
+    }
+    rows = [
+        (f"r{j}", name, json.dumps(["table.row_count"]), None, json.dumps(v))
+        for name, counts in histories.items()
+        for j, v in enumerate(counts)
+    ]
+    metrics = spark.createDataFrame(rows, schema=METRICS_SCHEMA)
+
+    for lo_q, hi_q in ((0.025, 0.975), (0.1, 0.9), (0.25, 0.5)):
+        expected = {
+            r["suite_name"]: tuple(r["q"])
+            for r in metrics.groupBy("suite_name")
+            .agg(
+                F.expr(
+                    f"percentile_approx(CAST(value AS BIGINT), array({lo_q}, {hi_q}), 10000)"
+                ).alias("q")
+            )
+            .collect()
+        }
+        for name, counts in histories.items():
+            suite = volume_assistant(
+                _MetricsTable(metrics), suite_name=name, quantiles=(lo_q, hi_q)
+            )
+            kw = suite.expectations[0].kwargs
+            assert (kw["min_value"], kw["max_value"]) == expected[name], (name, counts)
+            assert suite.meta["history_runs"] == len(counts)
+
+
+def test_metric_histories_come_in_run_order(spark):
+    """fetch_metric_histories lists each key's per-run values in run-id
+    order, whatever order the grouped rows arrive in, so a seeded bootstrap
+    over one stored history gives one answer."""
+    import json
+
+    from great_expectations_spark.profiler import fetch_metric_histories
+    from great_expectations_spark.sources.stores import METRICS_SCHEMA
+
+    key = ["column.mean", "v"]
+    rows = [
+        (f"r{j:02d}", "s", json.dumps(key), None, json.dumps(100.0 + j))
+        for j in reversed(range(20))
+    ]
+    metrics = spark.createDataFrame(rows, schema=METRICS_SCHEMA).repartition(4)
+    got = fetch_metric_histories(_MetricsTable(metrics), [key], min_runs=2)
+    assert got == {json.dumps(key): [100.0 + j for j in range(20)]}
