@@ -237,13 +237,18 @@ def load_checkpoint_config(
         else:
             doc[k] = v
 
-    # validate AFTER template merge and runtime overrides: a typo'd key
+    return checkpoint_config_from_doc(substitute_env_variables(doc, env))
+
+
+def checkpoint_config_from_doc(doc: dict) -> CheckpointConfig:
+    """Validate a resolved document — template merged, overrides applied,
+    variables substituted — into a CheckpointConfig. The CLI's flag mode
+    builds its config here directly, so flag values stay literal."""
+    # validated AFTER template merge and runtime overrides: a typo'd key
     # arriving from either source must error, not be silently dropped
     unknown = set(doc) - _ALLOWED_KEYS
     if unknown:
         raise ValueError(f"unknown checkpoint config keys: {sorted(unknown)}")
-
-    doc = substitute_env_variables(doc, env)
 
     batch = doc.get("batch") or {}
     batches = doc.get("batches") or None
@@ -310,13 +315,15 @@ def run_checkpoint(
     cfg: CheckpointConfig,
     run_id: Optional[str] = None,
 ) -> dict:
-    """Execute a checkpoint document end-to-end: load the batch, build the
-    actions, run CheckpointRunner (partitioned + store) or a plain engine
-    validate, and return a summary dict shaped like the CLI's JSON line.
+    """Execute a checkpoint end-to-end — the one execution path of the
+    ``scripts/run_validation.py`` CLI, documents and flags alike: load the
+    batch, build the actions, run CheckpointRunner (partitioned + store) or
+    a plain engine validate, and return the CLI's JSON summary.
 
-    ``resume: false`` salts the lineage fingerprint with the run_id so every
-    partition revalidates; ``resume: true`` (default) skips partitions whose
-    (suite, batch fingerprint) lineage row is already completed."""
+    ``resume: false`` salts the lineage fingerprint with a per-invocation
+    nonce so every partition revalidates; ``resume: true`` (default) skips
+    partitions whose (suite, batch fingerprint) lineage row is already
+    completed."""
     from great_expectations_spark.engine import SparkValidationEngine
     from great_expectations_spark.sources.batch import BatchSpec, load_batch
     from great_expectations_spark.sources.stores import (
@@ -336,7 +343,6 @@ def run_checkpoint(
     actions = [action_from_config(a) for a in cfg.action_list]
 
     if cfg.store and cfg.partition_by:
-        store = ResultsStore(spark, cfg.store)
         # resume:false must salt with a PER-INVOCATION nonce, not the run_id:
         # a coarse run_name_template (e.g. '%Y%m%d-nightly') repeats within
         # a day, and a repeated salt would match the earlier run's lineage
@@ -352,7 +358,7 @@ def run_checkpoint(
             from great_expectations_spark.core.config import deterministic_id
 
             fingerprint += f"+params:{deterministic_id(cfg.evaluation_parameters)}"
-        out = CheckpointRunner(spark, store, actions=actions).run(
+        out = CheckpointRunner(spark, ResultsStore(spark, cfg.store), actions).run(
             df,
             suite,
             partition_by=cfg.partition_by,
@@ -363,51 +369,20 @@ def run_checkpoint(
             evaluation_parameters=cfg.evaluation_parameters or None,
             persist=cfg.persist,
         )
-        results = store.read_results()
-        failed = results.filter(
-            (results.run_id == rid)
-            & (~results.success)
-            & results.partition_key.isNotNull()
-        ).count()
-        # global_rollup='validate' writes whole-table EVRs with a NULL
-        # partition_key — a failing global check (cross-partition uniqueness,
-        # a global row-count bound) must fail the run's summary/exit code on
-        # the FIRST run too, not only after a resume picks up its lineage row
-        global_failed = 0
-        if cfg.global_rollup == "validate" and not out.get("global_skipped"):
-            global_failed = results.filter(
-                (results.run_id == rid)
-                & (~results.success)
-                & results.partition_key.isNull()
-            ).count()
-        # latest-lineage failures, scoped to the partitions actually
-        # resume-SKIPPED this run — a partition that ran and failed THIS run
-        # is already in `failed` (and '__global__' in global_failed when the
-        # global pass ran), and must not be double-reported as skipped
-        import json as _json
-
-        skipped_keys = {
-            _json.dumps(p, default=str) for p in out["partitions_skipped"]
-        }
-        if out.get("global_skipped"):
-            skipped_keys.add("__global__")
-        skipped_failed = (
-            store.failed_partitions(suite.id, fingerprint) & skipped_keys
-            if skipped_keys
-            else set()
-        )
+        # a resume-skipped partition (or '__global__' pass) whose stored
+        # verdict failed still fails the run: a re-run after a failed run
+        # must not exit 0
         return {
             "checkpoint": cfg.name,
             "run_id": rid,
             "partitions_run": len(out["partitions_run"]),
             "partitions_skipped": len(out["partitions_skipped"]),
-            "failed_expectations": failed + global_failed,
-            "skipped_partitions_with_failures": len(skipped_failed),
-            "success": not (failed or global_failed or skipped_failed),
+            "failed_expectations": out["failed_expectations"],
+            "skipped_partitions_with_failures": len(out["skipped_failed"]),
+            "success": not (out["failed_expectations"] or out["skipped_failed"]),
         }
 
-    engine = SparkValidationEngine(spark)
-    result = engine.validate(
+    result = SparkValidationEngine(spark).validate(
         df,
         suite,
         result_format=cfg.result_format,
@@ -419,19 +394,18 @@ def run_checkpoint(
         store = ResultsStore(spark, cfg.store)
         store.write_results(result, rid)
         store.write_metrics(result, rid)
-    if actions:
-        fire_actions(
-            actions,
-            {
-                "event_type": "run_completed",
-                "run_id": rid,
-                "suite_name": suite.name,
-                "partitions_run": 1,
-                "partitions_skipped": 0,
-                "partitions_failed": 0 if result.success else 1,
-                "success": bool(result.success),
-            },
-        )
+    # one run, no partitions: the event carries the suite statistics, which
+    # the renderers turn into their n-of-m expectations line
+    fire_actions(
+        actions,
+        {
+            "event_type": "run_completed",
+            "run_id": rid,
+            "suite_name": suite.name,
+            "success": bool(result.success),
+            "statistics": result.statistics,
+        },
+    )
     return {
         "checkpoint": cfg.name,
         "run_id": rid,

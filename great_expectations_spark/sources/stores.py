@@ -110,6 +110,11 @@ def results_to_rows(result: SuiteValidationResult, run_id: Optional[str] = None)
     return rows
 
 
+def _n_failing(rows: list[tuple]) -> int:
+    """Failing EVR rows among RESULTS_SCHEMA tuples (field 5 is success)."""
+    return sum(1 for r in rows if not r[5])
+
+
 class ResultsStore:
     """Parquet-backed (Iceberg-shaped) store for validation outputs."""
 
@@ -188,45 +193,46 @@ class ResultsStore:
         df = self.spark.createDataFrame([row], schema=LINEAGE_SCHEMA)
         df.write.mode("append").parquet(self._path("lineage"))
 
-    def completed_partitions(self, suite_id: str, input_fingerprint: str) -> set[str]:
-        path = self._path("lineage")
+    def latest_completed(
+        self, suite_id: str, input_fingerprint: str
+    ) -> dict[str, tuple[str, Optional[bool]]]:
+        """partition_key -> (run_id, suite_success) of its latest completed
+        lineage row (by finished_at) for this (suite, fingerprint),
+        '__global__' included — THE lineage query: resume skips these keys,
+        the conjunction rollup reads their rows from that run_id, and a
+        False verdict fails the run's exit code although the partition is
+        skipped. suite_success is None on lineage written before that
+        column existed."""
         try:
-            df = self.spark.read.parquet(path)
+            df = self.spark.read.parquet(self._path("lineage"))
         except Exception:
-            return set()
+            return {}
+        ok = (
+            F.col("suite_success")
+            if "suite_success" in df.columns
+            else F.lit(None).cast("boolean")
+        )
         rows = (
             df.filter(
                 (F.col("suite_id") == suite_id)
                 & (F.col("input_fingerprint") == input_fingerprint)
                 & (F.col("status") == "completed")
             )
-            .select("partition_key")
-            .distinct()
+            .groupBy("partition_key")
+            .agg(F.max(F.struct("finished_at", "run_id", ok.alias("ok"))).alias("_last"))
+            .select("partition_key", "_last.run_id", "_last.ok")
             .collect()
         )
-        return {r[0] for r in rows}
+        return {r["partition_key"]: (r["run_id"], r["ok"]) for r in rows}
 
     def failed_partitions(self, suite_id: str, input_fingerprint: str) -> set[str]:
-        """Completed partitions whose LATEST lineage row (by finished_at)
-        recorded a failing suite — these are skipped on resume but must still
-        fail the run's exit code."""
-        try:
-            df = self.spark.read.parquet(self._path("lineage"))
-        except Exception:
-            return set()
-        if "suite_success" not in df.columns:
-            return set()
-        scoped = df.filter(
-            (F.col("suite_id") == suite_id)
-            & (F.col("input_fingerprint") == input_fingerprint)
-            & (F.col("status") == "completed")
-        )
-        latest = (
-            scoped.groupBy("partition_key")
-            .agg(F.max(F.struct("finished_at", "suite_success")).alias("_last"))
-            .select("partition_key", F.col("_last.suite_success").alias("ok"))
-        )
-        return {r["partition_key"] for r in latest.collect() if r["ok"] is False}
+        """Completed partitions whose latest lineage row recorded a failing
+        suite."""
+        return {
+            k
+            for k, (_, ok) in self.latest_completed(suite_id, input_fingerprint).items()
+            if ok is False
+        }
 
     def read_results(self) -> DataFrame:
         return self.spark.read.parquet(self._path("validation_results"))
@@ -714,57 +720,24 @@ class CheckpointRunner:
     def _notify(self, event: dict) -> None:
         fire_actions(self.actions, event)
 
-    def _latest_completed_runs(
-        self, suite_id: str, input_fingerprint: str, skipped_json: list[str]
-    ) -> dict[str, str]:
-        """partition_key_json -> run_id of its most recent completed lineage
-        row for THIS (suite, fingerprint) — the run whose stored rows
-        actually describe the current data."""
-        try:
-            lin = self.store.spark.read.parquet(self.store._path("lineage"))
-        except Exception:
-            return {}
-        rows = (
-            lin.filter(
-                (F.col("suite_id") == suite_id)
-                & (F.col("input_fingerprint") == input_fingerprint)
-                & (F.col("status") == "completed")
-                & F.col("partition_key").isin(skipped_json)
-            )
-            .groupBy("partition_key")
-            .agg(F.max(F.struct("finished_at", "run_id")).alias("_last"))
-            .select("partition_key", F.col("_last.run_id").alias("run_id"))
-            .collect()
-        )
-        return {r["partition_key"]: r["run_id"] for r in rows}
-
     def _conjunction_rollup(
         self,
         run_id: str,
         suite_name: str,
         run_rows: list[tuple],
-        skipped: list[dict],
-        suite_id: str,
-        input_fingerprint: str,
+        src_runs: dict[str, str],
     ) -> list[tuple]:
         """Global (partition_key-NULL) rows merged driver-side from this
         run's partition rows plus, for resume-skipped partitions, the rows
-        of the run that completed each partition under the SAME
-        (suite_id, input_fingerprint) — scoped through lineage, so rows from
+        of ``src_runs`` (partition_key -> the run that completed it under
+        the SAME (suite_id, input_fingerprint), from lineage) — so rows from
         a different dataset or an identically-named suite can never leak
         into the rollup. Bounded: #partitions × #expectations rows."""
         rows = list(run_rows)
-        if skipped:
-            skipped_json = [json.dumps(p, default=str) for p in skipped]
-            src_runs = self._latest_completed_runs(
-                suite_id, input_fingerprint, skipped_json
-            )
-            if src_runs:
-                try:
-                    prior = self.store.read_results()
-                except Exception:
-                    prior = None
-            else:
+        if src_runs:
+            try:
+                prior = self.store.read_results()
+            except Exception:
                 prior = None
             if prior is not None:
                 cond = None
@@ -832,22 +805,31 @@ class CheckpointRunner:
           (real observed_value semantics), lineage-tracked as '__global__'
           so resume skips it like any completed partition.
         - None: no global rows (the pre-existing behavior).
+
+        The returned dict reports the run's own outcome from the one
+        lineage read that decides the skips: ``failed_expectations`` counts
+        the failing EVR rows this invocation wrote (partition rows plus the
+        'validate' rollup's global rows; conjunction rows only restate
+        them), and ``skipped_failed`` names the resume-skipped keys
+        ('__global__' included) whose stored verdict failed.
         """
         from great_expectations_spark.engine import SparkValidationEngine
 
         run_id = run_id or str(uuid.uuid4())
         engine = SparkValidationEngine(self.spark)
-        done = self.store.completed_partitions(suite.id, input_fingerprint)
+        done = self.store.latest_completed(suite.id, input_fingerprint)
         parts = [
             r.asDict()
             for r in df.select(*partition_by).distinct().orderBy(*partition_by).collect()
         ]
         ran, skipped, failed = [], [], []
+        skipped_keys: list[str] = []
         run_rows: list[tuple] = []  # this run's partition EVR rows (rollup input)
-        for i, pkey in enumerate(parts):
+        for pkey in parts:
             key_json = json.dumps(pkey, default=str)
             if key_json in done:
                 skipped.append(pkey)
+                skipped_keys.append(key_json)
                 continue
             if fail_after is not None and len(ran) >= fail_after:
                 raise RuntimeError(f"simulated failure after {fail_after} partitions")
@@ -871,6 +853,9 @@ class CheckpointRunner:
                 result.partition_results.append(evr)
             result.results = []
             run_rows.extend(self.store.write_results(result, run_id))
+            # the slice's metrics are this partition's, not the table's:
+            # stored as global they would enter auto=True's history
+            result.metrics = {"partitions": [(pkey, result.metrics.get("global", {}))]}
             self.store.write_metrics(result, run_id)
             self.store.write_lineage(
                 run_id, suite.id, input_fingerprint, pkey, "completed", started,
@@ -889,10 +874,10 @@ class CheckpointRunner:
                     "statistics": result.statistics,
                 }
             )
-        global_skipped = False
+        n_failed = _n_failing(run_rows)
         if global_rollup == "validate":
             if "__global__" in done:
-                global_skipped = True
+                skipped_keys.append("__global__")
             else:
                 started = time.time()
                 gres = engine.validate(
@@ -901,7 +886,7 @@ class CheckpointRunner:
                     evaluation_parameters=evaluation_parameters,
                     persist=persist,
                 )
-                self.store.write_results(gres, run_id)
+                n_failed += _n_failing(self.store.write_results(gres, run_id))
                 self.store.write_metrics(gres, run_id)
                 self.store.write_lineage(
                     run_id, suite.id, input_fingerprint, None, "completed",
@@ -909,23 +894,14 @@ class CheckpointRunner:
                 )
         elif global_rollup == "conjunction" and (ran or skipped):
             grows = self._conjunction_rollup(
-                run_id, suite.name, run_rows, skipped, suite.id, input_fingerprint
+                run_id, suite.name, run_rows, {k: done[k][0] for k in skipped_keys}
             )
             if grows:
                 gdf = self.spark.createDataFrame(grows, schema=RESULTS_SCHEMA)
                 gdf.write.mode("append").parquet(
                     self.store._path("validation_results")
                 )
-        out = {
-            "run_id": run_id,
-            "partitions_run": ran,
-            "partitions_skipped": skipped,
-            "partitions_failed": failed,
-            # 'validate' rollup only: whether the whole-table pass was
-            # resume-skipped (its verdict then lives in the '__global__'
-            # lineage row, not in this run's result rows)
-            "global_skipped": global_skipped,
-        }
+        skipped_failed = [k for k in skipped_keys if done[k][1] is False]
         self._notify(
             {
                 "event_type": "run_completed",
@@ -934,10 +910,17 @@ class CheckpointRunner:
                 "partitions_run": len(ran),
                 "partitions_skipped": len(skipped),
                 "partitions_failed": len(failed),
-                "success": not failed,
+                "success": not (n_failed or skipped_failed),
             }
         )
-        return out
+        return {
+            "run_id": run_id,
+            "partitions_run": ran,
+            "partitions_skipped": skipped,
+            "partitions_failed": failed,
+            "failed_expectations": n_failed,
+            "skipped_failed": skipped_failed,
+        }
 
 
 def fire_actions(actions, event: dict) -> None:

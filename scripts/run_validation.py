@@ -5,11 +5,17 @@
         --input /path/or/catalog.table --suite suite.json \
         --partition-by fmt --store /path/to/store --result-format SUMMARY
 
-Per the deployment model (north rule): acquire the batch (path or Iceberg
+The flags are a checkpoint config (sources/checkpoint_config.py): --input
+(--table, --snapshot-id) is the batch, --actions the action_list, and so on.
+Without --checkpoint they are the whole config, taken literally (no $VAR
+substitution); with --checkpoint every flag given overrides the document.
+Either way the run is ``run_checkpoint``: acquire the batch (path or Iceberg
 table, optionally snapshot-pinned), validate the suite with per-partition
 verdicts, persist results + metrics + lineage to the store, and skip
 partitions already completed for the same (suite, input fingerprint) on
-re-run. Exits 0 iff every validated partition passed.
+re-run. Prints one JSON summary line; exits 0 iff every validated partition,
+every resume-skipped partition's stored verdict and the global rollup
+passed.
 """
 
 from __future__ import annotations
@@ -18,7 +24,6 @@ import argparse
 import json
 import os
 import sys
-import uuid
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -30,7 +35,8 @@ def build_parser() -> argparse.ArgumentParser:
         help="checkpoint config document (YAML/JSON): batch spec + suite + "
              "partition_by + store + resume policy + action_list in ONE "
              "file (reference checkpoint.yml shape; $VAR env substitution, "
-             "template: merge). Other flags act as runtime overrides.",
+             "template: merge). Every other flag given overrides the "
+             "document's key; without it the flags alone are the config.",
     )
     p.add_argument("--input", default=None, help="path (parquet/csv/...) or catalog table")
     p.add_argument("--table", action="store_true", help="treat --input as a catalog table")
@@ -38,10 +44,13 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--suite", default=None, help="suite JSON file")
     p.add_argument("--partition-by", default=None, help="comma-separated partition columns")
     p.add_argument("--store", default=None, help="results/metrics/lineage store root")
-    p.add_argument("--result-format", default="BASIC")
+    p.add_argument("--result-format", default=None, help="default BASIC")
     p.add_argument("--run-id", default=None)
     p.add_argument("--no-resume", action="store_true", help="revalidate completed partitions")
-    p.add_argument("--persist", action="store_true", help="cache the batch across passes")
+    p.add_argument(
+        "--persist", action="store_true", default=None,
+        help="cache the batch across passes",
+    )
     p.add_argument(
         "--actions", default=None,
         help="JSON file with a list of notification-action configs "
@@ -50,7 +59,7 @@ def build_parser() -> argparse.ArgumentParser:
              "validated partition and at run completion",
     )
     p.add_argument(
-        "--global-rollup", default="conjunction",
+        "--global-rollup", default=None,
         choices=["conjunction", "validate", "none"],
         help="global (partition_key-NULL) rows for URN chaining: driver-side "
              "conjunction merge (default), one true global validation pass, "
@@ -59,144 +68,52 @@ def build_parser() -> argparse.ArgumentParser:
     return p
 
 
-def main(argv=None) -> int:
-    args = build_parser().parse_args(argv)
-    from pyspark.sql import SparkSession
-
-    if args.checkpoint:
-        from great_expectations_spark.sources.checkpoint_config import (
-            load_checkpoint_config,
-            run_checkpoint,
-        )
-
-        overrides: dict = {}
-        if args.input:
-            overrides["batch"] = (
-                {"table": args.input} if args.table else {"path": args.input}
-            )
-        if args.suite:
-            overrides["suite"] = args.suite
-        if args.partition_by:
-            overrides["partition_by"] = args.partition_by.split(",")
-        if args.store:
-            overrides["store"] = args.store
-        if args.no_resume:
-            overrides["resume"] = False
-        cfg = load_checkpoint_config(args.checkpoint, runtime_overrides=overrides)
-        spark = SparkSession.builder.appName(f"ges-ckpt-{cfg.name}").getOrCreate()
-        spark.sparkContext.setLogLevel("WARN")
-        out = run_checkpoint(spark, cfg, run_id=args.run_id)
-        print(json.dumps(out))
-        return 0 if out["success"] else 1
-
-    if not args.input or not args.suite:
-        build_parser().error("--input and --suite are required without --checkpoint")
-
-    from great_expectations_spark.core.config import ExpectationSuite
-    from great_expectations_spark.engine import SparkValidationEngine
-    from great_expectations_spark.sources.batch import BatchSpec, load_batch
-    from great_expectations_spark.sources.stores import (
-        CheckpointRunner,
-        ResultsStore,
-        action_from_config,
-        fire_actions,
-    )
-
-    spark = SparkSession.builder.appName("ges-validation").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    with open(args.suite) as f:
-        suite = ExpectationSuite.from_json(f.read())
-    spec = BatchSpec(
-        table=args.input if args.table else None,
-        path=None if args.table else args.input,
-        snapshot_id=args.snapshot_id,
-    )
-    df = load_batch(spark, spec)
-    partition_by = args.partition_by.split(",") if args.partition_by else None
-    run_id = args.run_id or str(uuid.uuid4())
-    actions = []
+def flag_config(args) -> dict:
+    """The flags the user passed, as checkpoint config keys."""
+    batch = {}
+    if args.input:
+        batch["table" if args.table else "path"] = args.input
+    if args.snapshot_id is not None:
+        batch["snapshot_id"] = args.snapshot_id
+    doc = {
+        "batch": batch or None,
+        "suite": args.suite,
+        "partition_by": args.partition_by,
+        "store": args.store,
+        "resume": False if args.no_resume else None,
+        "result_format": args.result_format,
+        "persist": args.persist,
+        "global_rollup": args.global_rollup,
+    }
     if args.actions:
         with open(args.actions) as f:
-            actions = [action_from_config(cfg) for cfg in json.load(f)]
+            doc["action_list"] = json.load(f)
+    return {k: v for k, v in doc.items() if v is not None}
 
-    if args.store and partition_by:
-        store = ResultsStore(spark, args.store)
-        if args.no_resume:
-            # fresh fingerprint → nothing counts as completed
-            fingerprint = f"{spec.batch_id}-{run_id}"
-        else:
-            fingerprint = spec.batch_id
-        out = CheckpointRunner(spark, store, actions=actions).run(
-            df,
-            suite,
-            partition_by=partition_by,
-            input_fingerprint=fingerprint,
-            result_format=args.result_format,
-            run_id=run_id,
-            global_rollup=None if args.global_rollup == "none" else args.global_rollup,
-        )
-        results = store.read_results()
-        # count failures over PARTITION rows only: the global rollup row is
-        # derived from them (counting it would double-book each failure)
-        failed = results.filter(
-            (results.run_id == run_id)
-            & (~results.success)
-            & results.partition_key.isNotNull()
-        ).count()
-        # resume contract: 'exit 0 iff suite passed' includes partitions
-        # SKIPPED this run whose stored (latest) verdict was a failure —
-        # otherwise a re-run after a failed run would exit 0
-        skipped_failed = (
-            store.failed_partitions(suite.id, fingerprint)
-            if out["partitions_skipped"]
-            else set()
-        )
-        print(
-            json.dumps(
-                {
-                    "run_id": run_id,
-                    "partitions_run": len(out["partitions_run"]),
-                    "partitions_skipped": len(out["partitions_skipped"]),
-                    "failed_expectations": failed,
-                    "skipped_partitions_with_failures": len(skipped_failed),
-                }
-            )
-        )
-        return 1 if failed or skipped_failed else 0
 
-    engine = SparkValidationEngine(spark)
-    result = engine.validate(
-        df,
-        suite,
-        result_format=args.result_format,
-        partition_by=partition_by,
-        persist=args.persist,
+def main(argv=None) -> int:
+    parser = build_parser()
+    args = parser.parse_args(argv)
+    from pyspark.sql import SparkSession
+
+    from great_expectations_spark.sources.checkpoint_config import (
+        checkpoint_config_from_doc,
+        load_checkpoint_config,
+        run_checkpoint,
     )
-    if args.store:
-        store = ResultsStore(spark, args.store)
-        store.write_results(result, run_id)
-        store.write_metrics(result, run_id)
-    fire_actions(
-        actions,
-        {
-            "event_type": "run_completed",
-            "run_id": run_id,
-            "suite_name": suite.name,
-            "success": result.success,
-            "statistics": result.statistics,
-        },
-    )
-    print(
-        json.dumps(
-            {
-                "run_id": run_id,
-                "success": result.success,
-                "statistics": result.statistics,
-            }
-        )
-    )
-    return 0 if result.success else 1
+
+    flags = flag_config(args)
+    if args.checkpoint:
+        cfg = load_checkpoint_config(args.checkpoint, runtime_overrides=flags)
+    elif not args.input or not args.suite:
+        parser.error("--input and --suite are required without --checkpoint")
+    else:
+        cfg = checkpoint_config_from_doc(flags)
+    spark = SparkSession.builder.appName(f"ges-ckpt-{cfg.name}").getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    out = run_checkpoint(spark, cfg, run_id=args.run_id)
+    print(json.dumps(out))
+    return 0 if out["success"] else 1
 
 
 if __name__ == "__main__":

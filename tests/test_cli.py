@@ -486,3 +486,102 @@ def test_cli_profile_suite_discovery(spark, tmp_path):
         capture_output=True, text=True, timeout=120,
     )
     assert r2.returncode != 0 and "multi-batch mode" in r2.stderr
+
+
+def _cli_main():
+    """scripts/run_validation.py's main(), loaded in-process: its
+    getOrCreate() returns the session fixture, so no new Spark starts."""
+    import importlib.util
+
+    spec = importlib.util.spec_from_file_location(
+        "run_validation", f"{REPO}/scripts/run_validation.py"
+    )
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod.main
+
+
+def _row_count_bound_suite(spark, tmp_path):
+    """A table row-count bound every l_returnflag partition passes but the
+    whole table fails."""
+    from pyspark.sql import functions as F
+
+    df = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
+    biggest = df.groupBy("l_returnflag").count().agg(F.max("count")).collect()[0][0]
+    bound = (biggest + df.count()) // 2
+    p = tmp_path / "rowcount.json"
+    p.write_text(json.dumps({
+        "name": "rowcount",
+        "expectations": [{
+            "expectation_type": "expect_table_row_count_to_be_between",
+            "kwargs": {"min_value": 0, "max_value": int(bound)},
+        }],
+    }))
+    return str(p)
+
+
+def _main_json(main, argv, capsys):
+    code = main(argv)
+    return code, json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+
+
+def test_cli_flag_mode_validate_rollup_global_failure(spark, tmp_path, capsys):
+    """Flag mode runs the same checkpoint as a document: a whole-table
+    failure of the 'validate' rollup fails the run although every partition
+    passes."""
+    code, out = _main_json(_cli_main(), [
+        "--input", "/root/testdata/sf0.001/lineitem.parquet",
+        "--suite", _row_count_bound_suite(spark, tmp_path),
+        "--partition-by", "l_returnflag",
+        "--store", str(tmp_path / "store"),
+        "--global-rollup", "validate",
+    ], capsys)
+    assert out["partitions_run"] == 3
+    assert out["failed_expectations"] == 1
+    assert code == 1
+
+
+def test_cli_no_resume_twice_same_run_id_revalidates(spark, tmp_path, capsys):
+    """--no-resume salts the lineage fingerprint with a per-invocation
+    nonce: a repeated --run-id must not make the second run skip, nor count
+    the first attempt's stored rows."""
+    main = _cli_main()
+    argv = [
+        "--input", "/root/testdata/sf0.001/lineitem.parquet",
+        "--suite", _suite_file(tmp_path, False),
+        "--partition-by", "l_returnflag",
+        "--store", str(tmp_path / "store"),
+        "--run-id", "same", "--no-resume",
+    ]
+    _, first = _main_json(main, argv, capsys)
+    code, second = _main_json(main, argv, capsys)
+    assert first["partitions_run"] == 3
+    assert second["partitions_run"] == 3 and second["partitions_skipped"] == 0
+    assert second["failed_expectations"] == first["failed_expectations"] == 3
+    assert code == 1
+
+
+def test_cli_checkpoint_document_takes_flag_overrides(spark, tmp_path, capsys):
+    """With --checkpoint, every flag given overrides the document: here
+    --global-rollup none, so no partition_key-NULL rows are written."""
+    from pyspark.sql import functions as F
+
+    from great_expectations_spark.sources.stores import ResultsStore
+
+    store = tmp_path / "store"
+    ckpt = tmp_path / "ckpt.json"
+    ckpt.write_text(json.dumps({
+        "name": "doc",
+        "batch": {"path": "/root/testdata/sf0.001/lineitem.parquet"},
+        "suite": _suite_file(tmp_path, True),
+        "partition_by": ["l_returnflag"],
+        "store": str(store),
+        "global_rollup": "conjunction",
+    }))
+    code, out = _main_json(
+        _cli_main(), ["--checkpoint", str(ckpt), "--global-rollup", "none"], capsys
+    )
+    assert code == 0 and out["checkpoint"] == "doc" and out["partitions_run"] == 3
+    rows = ResultsStore(spark, str(store)).read_results()
+    assert rows.filter(F.col("partition_key").isNull()).count() == 0
+    assert rows.count() == 3
