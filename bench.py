@@ -5,14 +5,14 @@ Prints ONE JSON line:
   {"metric": ..., "value": total_sec, "unit": "sec", "queries": {...}, "sf": ...}
 
 Modes:
-  python bench.py             # headline bench (driver contract)
-  python bench.py --scaling   # same image-validation job at local[8] vs
-                              # local[32] → throughput + scaling efficiency
-                              # (north-rule two-cluster-size evidence)
+  python bench.py              # headline bench (driver contract)
+  python bench.py --streaming  # micro-batch image-suite throughput +
+                               # stateful-dedup TTL evidence
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import sys
@@ -26,104 +26,6 @@ from pyspark.sql import functions as F
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 N_IMAGES = int(os.environ.get("SPARK_GRAFT_BENCH_IMAGES", "100000"))
-
-
-def _host_busy_seconds() -> float:
-    """Total non-idle CPU seconds across all cores since boot (/proc/stat)."""
-    with open("/proc/stat") as f:
-        vals = [int(x) for x in f.readline().split()[1:]]
-    idle = vals[3] + vals[4]  # idle + iowait
-    return (sum(vals) - idle) / os.sysconf("SC_CLK_TCK")
-
-
-def _tree_cpu_seconds() -> float:
-    """CPU seconds of this process tree (python + the local-mode JVM child):
-    live descendants from /proc plus already-reaped children (os.times)."""
-    import glob
-
-    children: dict[int, list[int]] = {}
-    times: dict[int, int] = {}
-    for st in glob.glob("/proc/[0-9]*/stat"):
-        try:
-            with open(st) as f:
-                s = f.read()
-        except OSError:
-            continue  # raced a process exit
-        pid = int(s[: s.index(" ")])
-        rest = s[s.rindex(")") + 2 :].split()
-        children.setdefault(int(rest[1]), []).append(pid)
-        times[pid] = int(rest[11]) + int(rest[12])  # utime + stime
-    total, stack = 0, [os.getpid()]
-    while stack:
-        p = stack.pop()
-        total += times.get(p, 0)
-        stack.extend(children.get(p, []))
-    t = os.times()
-    return total / os.sysconf("SC_CLK_TCK") + t.children_user + t.children_system
-
-
-def _bw_copy_worker(mib: int, seconds: float) -> float:
-    """Steady-state copy bandwidth in GiB/s (read+write), self-timed:
-    src/dst preallocated and touched before the clock starts so allocator
-    and first-touch page faults stay out of the measurement."""
-    import numpy as np
-
-    src = np.ones(mib * 131072, dtype=np.float64)  # mib MiB
-    dst = np.empty_like(src)
-    np.copyto(dst, src)  # warm dst pages
-    t0 = time.time()
-    passes = 0
-    while time.time() - t0 < seconds:
-        np.copyto(dst, src)
-        passes += 1
-    return passes * 2 * mib / 1024.0 / (time.time() - t0)
-
-
-def _mem_bandwidth_probe(workers: int = 16) -> dict[str, float]:
-    """Effective memory-copy bandwidth, 1 process vs `workers` concurrent
-    processes (GiB/s, read+write). The scaling bench's wide leg is
-    bandwidth-bound on this single box, and hypervisor-neighbor bandwidth
-    pressure is invisible to /proc/stat — this probe makes each capture
-    carry the hardware ceiling it actually ran under. The aggregate/worker
-    ratio vs the 1-process figure bounds the parallel efficiency ANY
-    memory-bound job can show on this box at that moment."""
-    import multiprocessing as mp
-
-    # best-of-2 windows per leg: an external burst caught by one window
-    # would otherwise understate a leg and skew the ratio either way
-    one = max(_bw_copy_worker(512, 3.0) for _ in range(2))
-    ctx = mp.get_context("fork")
-    with ctx.Pool(workers) as pool:
-        # each worker self-times its steady-state loop, so pool startup
-        # skew stays out; aggregate = sum of concurrent per-worker rates
-        agg = max(
-            sum(pool.starmap(_bw_copy_worker, [(256, 3.0)] * workers))
-            for _ in range(2)
-        )
-    return {
-        "mem_bw_gibps_1p": round(one, 1),
-        f"mem_bw_gibps_{workers}p": round(agg, 1),
-        "mem_bw_parallel_ratio": round(agg / one / workers, 3),
-    }
-
-
-class _ExternalLoadMeter:
-    """External (non-bench) CPU pressure during the run, in average busy
-    cores: (host busy Δ − own process-tree busy Δ) / wall. This is what the
-    loadavg fields can't show once the bench's own threads saturate them —
-    call stop() BEFORE spark.stop() so the JVM's time is still in /proc."""
-
-    def start(self) -> None:
-        self._t0 = time.time()
-        self._host0 = _host_busy_seconds()
-        self._tree0 = _tree_cpu_seconds()
-
-    def stop(self) -> float:
-        wall = time.time() - self._t0
-        ext = (_host_busy_seconds() - self._host0) - (
-            _tree_cpu_seconds() - self._tree0
-        )
-        return round(max(0.0, ext) / max(wall, 1e-9), 2)
 
 
 def make_spark(cores: int) -> SparkSession:
@@ -207,20 +109,19 @@ def _images_path(spark, n_images: int) -> str:
     return path
 
 
-def bench_images(spark, n_images: int) -> dict:
-    """North-star workload: image-payload validation throughput over a stored
-    table — Arrow pandas_udf decode + bundled rollup aggregation."""
+def bench_images(spark, n_images: int) -> None:
+    """North-star workload: image-payload validation over a stored table —
+    Arrow pandas_udf decode + bundled rollup aggregation."""
     from great_expectations_spark.operators.images import validate_images
 
     df = spark.read.parquet(_images_path(spark, n_images))
-    t0 = time.time()
     result = validate_images(df, _image_suite(), partition_by=["fmt"], persist=True)
-    dt = time.time() - t0
     assert result.results, "no results"
-    return {"sec": dt, "rows": n_images, "rows_per_sec": n_images / dt}
 
 
-def run_headline(spark) -> dict[str, float]:
+def run_headline(spark) -> dict[str, list[float]]:
+    """Each headline query's trial times in seconds, one per interleaved
+    pass, in registration order."""
     from great_expectations_spark.engine import SparkValidationEngine
     from great_expectations_spark.operators import dedup as dd
     from great_expectations_spark.operators import similarity as sim
@@ -228,15 +129,10 @@ def run_headline(spark) -> dict[str, float]:
 
     engine = SparkValidationEngine(spark)
     queries: list[tuple[str, object]] = []
-    raw_trials: dict[str, list[float]] = {}
-    trial_ext: dict[str, list[float]] = {}
 
     def timed(name, fn):
         # registration only — execution happens in interleaved passes below
         queries.append((name, fn))
-
-    run_headline.raw_trials = raw_trials  # exposed for the JSON record
-    run_headline.trial_ext = trial_ext
 
     lineitem = spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
     orders = spark.read.parquet(f"{SF_DIR}/orders.parquet")
@@ -336,40 +232,18 @@ def run_headline(spark) -> dict[str, float]:
     # reading 17-20 s in both trials while its standalone time was unchanged).
     # Interleaving full PASSES over the query list spreads each query's
     # trials minutes apart, so a burst costs each query at most one trial and
-    # min() still has a clean candidate. Each trial carries its own
-    # external-cores meter reading so the record is auditable per trial.
+    # min() still has a clean candidate.
+    raw_trials: dict[str, list[float]] = {name: [] for name, _ in queries}
     passes = int(os.environ.get("SPARK_GRAFT_BENCH_PASSES", "3"))
     for _ in range(passes):
         for name, fn in queries:
-            meter = _ExternalLoadMeter()
-            meter.start()
             t0 = time.time()
             fn()
-            raw_trials.setdefault(name, []).append(round(time.time() - t0, 3))
-            trial_ext.setdefault(name, []).append(meter.stop())
+            raw_trials[name].append(round(time.time() - t0, 3))
             # drop persisted intermediates (e.g. minhash signatures) so one
             # run's cache doesn't pressure the next run's memory
             spark.catalog.clearCache()
-    return {name: min(raw_trials[name]) for name, _ in queries}
-
-
-def bench_dedup(spark, n_docs: int) -> dict:
-    """MinHash+LSH near-dup detection throughput over a stored corpus."""
-    from great_expectations_spark.operators.dedup import minhash_dedup_pairs
-
-    path = f"/tmp/ges_bench_docs_{n_docs}"
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        from great_expectations_spark.testing.documents import distributed_documents_df
-
-        distributed_documents_df(spark, n_docs, partitions=max(CPUS * 2, 16)).write.mode(
-            "overwrite"
-        ).parquet(path)
-    df = spark.read.parquet(path)
-    t0 = time.time()
-    n_pairs = minhash_dedup_pairs(df, threshold=0.8, bands=8).count()
-    dt = time.time() - t0
-    spark.catalog.clearCache()
-    return {"sec": dt, "rows": n_docs, "rows_per_sec": n_docs / dt, "pairs": n_pairs}
+    return raw_trials
 
 
 def bench_streaming(spark) -> dict:
@@ -523,10 +397,18 @@ def bench_streaming(spark) -> dict:
 
 
 def main() -> None:
-    if "--streaming" in sys.argv:
-        spark = make_spark(CPUS)
-        spark.sparkContext.setLogLevel("ERROR")
-        load_start = [round(x, 2) for x in os.getloadavg()]
+    # an unknown flag (e.g. a retired mode) exits 2 before any JVM starts
+    parser = argparse.ArgumentParser(description="headline benchmark harness")
+    parser.add_argument(
+        "--streaming", action="store_true",
+        help="streaming evidence instead of the headline",
+    )
+    args = parser.parse_args()
+
+    spark = make_spark(CPUS)
+    spark.sparkContext.setLogLevel("ERROR")
+    load_start = [round(x, 2) for x in os.getloadavg()]
+    if args.streaming:
         bench_images(spark, 5000)  # warm codegen + python workers
         out = bench_streaming(spark)
         out["loadavg_start"] = load_start
@@ -535,149 +417,12 @@ def main() -> None:
         spark.stop()
         return
 
-    if "--scaling-dedup" in sys.argv:
-        n = int(os.environ.get("SPARK_GRAFT_SCALING_DOCS", "480000"))
-        out = {}
-        load_start = [round(x, 2) for x in os.getloadavg()]
-        raw: dict[str, list[float]] = {}
-        for cores in (8, 32):
-            spark = make_spark(cores)
-            spark.sparkContext.setLogLevel("ERROR")
-            bench_dedup(spark, 20000)  # warm codegen + python workers
-            times = [round(bench_dedup(spark, n)["sec"], 2) for _ in range(2)]
-            raw[f"local[{cores}]"] = times
-            best = min(times)
-            out[f"local[{cores}]"] = {
-                "sec": round(best, 2),
-                "rows_per_sec": round(n / best, 1),
-            }
-            spark.stop()
-        speedup = out["local[32]"]["rows_per_sec"] / out["local[8]"]["rows_per_sec"]
-        out["speedup_8_to_32"] = round(speedup, 3)
-        out["scaling_efficiency"] = round(speedup / 4.0, 3)
-        out["n_docs"] = n
-        out["raw_trials"] = raw
-        out["loadavg_start"] = load_start
-        out["loadavg_end"] = [round(x, 2) for x in os.getloadavg()]
-        print(json.dumps(out))
-        return
-
-    if "--scaling" in sys.argv:
-        n = max(N_IMAGES, int(os.environ.get("SPARK_GRAFT_SCALING_IMAGES", "8000000")))
-        rounds = int(os.environ.get("SPARK_GRAFT_SCALING_ROUNDS", "2"))
-        # cluster sizes N and 4N; default 4→16 so the measurement stays below
-        # the single-box memory-bandwidth ceiling (at 32 threads the shared
-        # bus, not the engine, is the bottleneck — a real 4N-executor cluster
-        # scales its bandwidth with the executors)
-        small = int(os.environ.get("SPARK_GRAFT_SCALING_N", "4"))
-        sizes = (small, small * 4)
-        # the host is shared/noisy — interleave cluster sizes across rounds
-        # so a contention burst hits both sizes, then take each size's best
-        # (least-contended) time
-        load_start = [round(x, 2) for x in os.getloadavg()]
-        bw_start = _mem_bandwidth_probe(sizes[1])
-        # materialize AND page-cache-warm the input before any timed leg:
-        # the per-trial warm only touches 20k images, so on a reboot-cold
-        # host the first legs pay the shared virtual disk for the full
-        # table (t38: 135.6 s and 87.7 s first trials decaying to 14.9 s
-        # as the cache filled — a warming curve, not a scaling signal)
-        warm_spark = make_spark(sizes[1])
-        try:
-            warm_spark.sparkContext.setLogLevel("ERROR")
-            images_dir = _images_path(warm_spark, n)
-        finally:
-            warm_spark.stop()
-        for fname in os.listdir(images_dir):
-            with open(os.path.join(images_dir, fname), "rb") as fh:
-                while fh.read(1 << 24):
-                    pass
-        trials: dict[int, list[float]] = {c: [] for c in sizes}
-        ext_cores: dict[int, list[float]] = {c: [] for c in sizes}
-
-        def one_trial(cores: int) -> None:
-            spark = make_spark(cores)
-            try:
-                spark.sparkContext.setLogLevel("ERROR")
-                _images_path(spark, n)  # materialize input outside timing
-                bench_images(spark, 20000)  # warm JVM codegen + python workers
-                meter = _ExternalLoadMeter()
-                meter.start()
-                sec = round(bench_images(spark, n)["sec"], 2)
-                ext = meter.stop()  # before spark.stop(): JVM time still in /proc
-                # append as a pair so a failed trial never desyncs the lists
-                trials[cores].append(sec)
-                ext_cores[cores].append(ext)
-            finally:
-                spark.stop()
-
-        for r in range(rounds):
-            for cores in sizes:
-                one_trial(cores)
-        # contamination-aware retry: if EVERY trial of a size was squeezed by
-        # external load (per-trial meter >= CLEAN_EXT cores), min() has no
-        # clean trial to pick — t29's two wide trials ate 4.3- and 1.8-core
-        # bursts and the capture was unusable. Re-run that size (bounded) until
-        # one machine-verified-clean trial exists; every attempt stays in
-        # raw_trials/external_cpu_cores_per_trial, so the record shows exactly
-        # which trials were externally squeezed and which were clean.
-        clean_ext = float(os.environ.get("SPARK_GRAFT_SCALING_CLEAN_EXT", "0.3"))
-        max_extra = int(os.environ.get("SPARK_GRAFT_SCALING_MAX_EXTRA", "3"))
-        extra_used: dict[int, int] = {c: 0 for c in sizes}
-        for cores in sizes:
-            while (
-                extra_used[cores] < max_extra
-                and not any(e < clean_ext for e in ext_cores[cores])
-            ):
-                extra_used[cores] += 1
-                one_trial(cores)
-        # min over ALL trials: external contention only ever INFLATES a
-        # trial's wall time, so the fastest trial is the least-contaminated
-        # estimate even when its meter reading is above clean_ext (a burst can
-        # land in a phase that isn't the bottleneck — t30's winner did exactly
-        # that). The retry's job was only to guarantee a fair candidate
-        # exists; which trial actually won, and whether a clean one existed,
-        # is recorded per size so the selection is auditable from the JSON.
-        best = {c: min(trials[c]) for c in sizes}
-        out = {
-            f"local[{c}]": {
-                "sec": round(best[c], 2),
-                "rows_per_sec": round(n / best[c], 1),
-                "best_trial_ext_cores": ext_cores[c][trials[c].index(best[c])],
-                "clean_trial_exists": any(e < clean_ext for e in ext_cores[c]),
-            }
-            for c in sizes
-        }
-        speedup = best[sizes[0]] / best[sizes[1]]
-        out[f"speedup_{sizes[0]}_to_{sizes[1]}"] = round(speedup, 3)
-        out["scaling_efficiency"] = round(speedup / 4.0, 3)
-        out["n_images"] = n
-        out["rounds"] = rounds
-        out["raw_trials"] = {f"local[{c}]": trials[c] for c in sizes}
-        out["external_cpu_cores_per_trial"] = {
-            f"local[{c}]": ext_cores[c] for c in sizes
-        }
-        out["contamination_retries"] = {
-            f"local[{c}]": extra_used[c] for c in sizes
-        }
-        out["clean_ext_threshold_cores"] = clean_ext
-        out["mem_bw_start"] = bw_start
-        out["mem_bw_end"] = _mem_bandwidth_probe(sizes[1])
-        out["loadavg_start"] = load_start
-        out["loadavg_end"] = [round(x, 2) for x in os.getloadavg()]
-        print(json.dumps(out))
-        return
-
-    spark = make_spark(CPUS)
-    spark.sparkContext.setLogLevel("ERROR")
     # self-annotating record (VERDICT r4 #4): host load at start/end plus the
     # raw per-trial times, so a contended capture is identifiable from the
     # JSON alone (this host's external load swings timings 3x)
-    load_start = [round(x, 2) for x in os.getloadavg()]
-    meter = _ExternalLoadMeter()
-    meter.start()
-    timings = run_headline(spark)
-    external_cores = meter.stop()
+    raw_trials = run_headline(spark)
     load_end = [round(x, 2) for x in os.getloadavg()]
+    timings = {name: min(trials) for name, trials in raw_trials.items()}
     total = round(sum(timings.values()), 3)
     print(
         json.dumps(
@@ -687,11 +432,9 @@ def main() -> None:
                 "unit": "sec",
                 "queries": timings,
                 "per_query": "best per query across interleaved full passes (shared noisy host)",
-                "raw_trials": run_headline.raw_trials,
-                "external_cpu_cores_per_trial": run_headline.trial_ext,
+                "raw_trials": raw_trials,
                 "loadavg_start": load_start,
                 "loadavg_end": load_end,
-                "external_cpu_cores_avg": external_cores,
                 "sf": SF_DIR,
                 "cpus": CPUS,
                 "n_images": N_IMAGES,

@@ -8,7 +8,7 @@ has heavy-hitter keys (AQE skew-join covers sort-merge joins at runtime —
 `spark.sql.adaptive.skewJoin.enabled` is set in our sessions — but
 aggregation-state skew needs the two-phase rewrite below).
 
-MEASURED CAVEAT (tools/scale_rehearsal.py --skew-rows, 10M/40M rows with a
+MEASURED CAVEAT (BENCH.md §2b, the skew trial at 10M/40M rows with a
 20%-of-rows hot key): Spark >=3.5 natively rescues two of the classic
 salting targets, and the naive plans beat the salted rewrites there —
 rank-limit window tops compile to WindowGroupLimit with a Partial pass

@@ -113,8 +113,10 @@ def _re_lit(text: str) -> str:
 
 
 def _seq_re(seq) -> str:
-    # CPython TimeRE.__seqToRE: longest-first so e.g. 'july' wins over 'jul'
-    return "|".join(_re_lit(s) for s in sorted(seq, key=len, reverse=True) if s)
+    # CPython TimeRE.__seqToRE: longest-first so e.g. 'july' wins over 'jul';
+    # an empty name stays an empty alternative unless every name is empty
+    ordered = sorted(seq, key=len, reverse=True)
+    return "|".join(_re_lit(s) for s in ordered) if any(ordered) else ""
 
 
 def _locale_strings() -> dict:

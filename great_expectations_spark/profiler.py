@@ -100,8 +100,10 @@ _HISTORY_TYPES = {
     "expect_column_min_to_be_between",
     "expect_column_max_to_be_between",
     "expect_column_mean_to_be_between",
+    "expect_column_median_to_be_between",
     "expect_column_sum_to_be_between",
     "expect_column_stdev_to_be_between",
+    "expect_column_unique_value_count_to_be_between",
 }
 # auto=True types filled with the observed non-null value set
 _VALUE_SET_TYPES = {

@@ -296,7 +296,10 @@ def streaming_dedup(
     ``state_ttl`` expires idle keys so state size is bounded by the
     distinct-key arrival rate × TTL, not the stream's lifetime. Use upstream
     ``F.md5(normalize_text(...))`` (operators/text.py) to build the
-    fingerprint key column.
+    fingerprint key column. Under ``trigger(availableNow=True)`` the query
+    does not terminate on its own while keyed state exists (the timeout
+    keeps scheduling no-data micro-batches), so stop it once the sink holds
+    what you need.
     """
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout

@@ -642,6 +642,31 @@ def test_strftime_week_derived_dates(spark):
     assert sorted(zevr.result["partial_unexpected_list"]) == sorted(rejected)
 
 
+def test_seq_re_matches_cpython_seq_to_re():
+    """A name list's alternation equals CPython's TimeRE.__seqToRE, whose
+    empty name (e.g. an empty tzname[1]) stays an empty alternative, so %Z
+    can match an empty zone name; an all-empty list has no alternation."""
+    import _strptime
+
+    from great_expectations_spark.operators.conditions import _seq_re
+
+    time_re = _strptime.TimeRE()
+    for seq in (
+        ["utc", "gmt", "est", ""],
+        ["utc", "gmt", "est"],
+        ["", "utc", ""],
+        ["a.m.", "p.m."],
+        ["july", "jul", "june"],
+        ["", ""],
+        [],
+    ):
+        cpython = time_re._TimeRE__seqToRE(seq, "Z")
+        if cpython:
+            assert cpython.startswith("(?P<Z>") and cpython.endswith(")")
+            cpython = cpython[len("(?P<Z>"):-1]
+        assert _seq_re(seq) == cpython, seq
+
+
 def test_catch_exceptions_false_raises(spark):
     # reference validator.py:956-1004: catch_exceptions=True (default)
     # captures failures as exception EVRs; False re-raises and aborts —

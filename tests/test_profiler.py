@@ -246,7 +246,7 @@ def test_auto_bootstrap_range_from_metrics_history(spark, tmp_path):
 
     from great_expectations_spark.core.config import ExpectationSuite
     from great_expectations_spark.engine import SparkValidationEngine
-    from great_expectations_spark.profiler import resolve_auto
+    from great_expectations_spark.profiler import fetch_metric_histories, resolve_auto
     from great_expectations_spark.sources.stores import ResultsStore
 
     store = ResultsStore(spark, str(tmp_path / "autostore"))
@@ -256,15 +256,27 @@ def test_auto_bootstrap_range_from_metrics_history(spark, tmp_path):
         "expect_column_mean_to_be_between", column="v", min_value=-1e9, max_value=1e9
     )
     seed_suite.add("expect_table_row_count_to_be_between", min_value=0, max_value=10**12)
-    # seeded multi-run history: batch means 10, 20, 30, 40, 50
+    seed_suite.add(
+        "expect_column_median_to_be_between", column="v", min_value=-1e9, max_value=1e9
+    )
+    seed_suite.add(
+        "expect_column_unique_value_count_to_be_between",
+        column="u", min_value=0, max_value=10**9,
+    )
+    # seeded multi-run history: batch means and medians 10, 20, 30, 40, 50;
+    # distinct u counts 5, 10, 15, 20, 25
     for i, mu in enumerate((10.0, 20.0, 30.0, 40.0, 50.0)):
         batch = spark.range(0, 100 + 10 * i).select(
-            (F.lit(mu) + (F.col("id") % 3) - 1).alias("v")
+            (F.lit(mu) + (F.col("id") % 3) - 1).alias("v"),
+            (F.col("id") % (5 + 5 * i)).alias("u"),
         )
         store.write_metrics(eng.validate(batch, seed_suite), run_id=f"r{i}")
 
     # point path (no store): bounds pin the current batch's mean exactly
-    today = spark.range(0, 100).select((F.lit(33.0) + (F.col("id") % 3) - 1).alias("v"))
+    today = spark.range(0, 100).select(
+        (F.lit(33.0) + (F.col("id") % 3) - 1).alias("v"),
+        (F.col("id") % 12).alias("u"),
+    )
     kw_point = resolve_auto(
         today, "expect_column_mean_to_be_between", {"column": "v", "auto": True}
     )
@@ -290,6 +302,21 @@ def test_auto_bootstrap_range_from_metrics_history(spark, tmp_path):
     assert isinstance(kw_rc["min_value"], int) and isinstance(kw_rc["max_value"], int)
     assert kw_rc["min_value"] < kw_rc["max_value"]
     assert 95 <= kw_rc["min_value"] <= 115 and 125 <= kw_rc["max_value"] <= 145
+
+    # the exact median and the unique-value count bootstrap from the series
+    # the planner stores under their _reg keys, prefetched in one job
+    med = ("expect_column_median_to_be_between", {"column": "v", "auto": True})
+    uniq = (
+        "expect_column_unique_value_count_to_be_between", {"column": "u", "auto": True}
+    )
+    hist = fetch_metric_histories(
+        store, [["column.median", "v"], ["column.distinct_values.count", "u"]], 2
+    )
+    assert len(hist) == 2
+    kw_med = resolve_auto(today, *med, histories=hist, seed=7)
+    assert 5.0 <= kw_med["min_value"] <= 25.0 < 35.0 <= kw_med["max_value"] <= 55.0
+    kw_uniq = resolve_auto(today, *uniq, histories=hist, seed=7)
+    assert 0 <= kw_uniq["min_value"] <= 12.5 < 17.5 <= kw_uniq["max_value"] <= 30
 
     # end-to-end through the engine: validates against the band, not the
     # pin. History is scoped to the validated suite's name by default (a

@@ -1,6 +1,8 @@
 """Structured-Streaming validation (streaming/validate_stream.py) + partition
 builders (operators/partition.py)."""
 
+import time
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -14,6 +16,18 @@ from great_expectations_spark.streaming.validate_stream import (
     streaming_metrics,
     validate_stream,
 )
+
+
+@pytest.fixture(autouse=True)
+def no_query_left_running(spark):
+    """A streaming query a test leaves active keeps running micro-batches
+    against the shared session through every later test: fail the test that
+    leaked it, and stop what it left."""
+    yield
+    leaked = spark.streams.active
+    for q in leaked:
+        q.stop()
+    assert not leaked, [q.name for q in leaked]
 
 
 @pytest.fixture(scope="module")
@@ -47,7 +61,7 @@ def test_validate_stream_micro_batches(spark, events_stream_dir, tmp_path):
         trigger={"availableNow": True},
         on_result=lambda r, bid: results.append((bid, r)),
     )
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
     assert results, "no micro-batches validated"
     total_elem = sum(
         r.results[0].result["element_count"] for _, r in results
@@ -78,7 +92,7 @@ def test_streaming_metrics_windowed(spark, events_stream_dir):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
     rows = spark.sql("SELECT * FROM stream_metrics").collect()
     # append mode emits only watermark-closed windows; with availableNow the
     # final window may be withheld — compare against the closed subset
@@ -119,7 +133,7 @@ def test_streaming_metrics_respects_row_condition(spark, events_stream_dir):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
     rows = spark.sql("SELECT * FROM stream_metrics_rc").collect()
     assert rows
     batch = spark.read.parquet(events_stream_dir)
@@ -224,9 +238,21 @@ def test_streaming_dedup_across_micro_batches(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
-    rows = spark.sql("SELECT fp FROM dedup_out").collect()
-    fps = sorted(r["fp"] for r in rows)
+    # keyed state with a processing-time timeout keeps an availableNow query
+    # running no-data micro-batches, so it never terminates on its own: wait
+    # until both files' batches are in the sink (fp2 is only in b1, fp3 only
+    # in b2), then stop it
+    fps: list = []
+    try:
+        deadline = time.time() + 120
+        while time.time() < deadline:
+            rows = spark.sql("SELECT fp FROM dedup_out").collect()
+            fps = sorted(r["fp"] for r in rows)
+            if {"fp2", "fp3"} <= set(fps):
+                break
+            time.sleep(0.25)
+    finally:
+        q.stop()
     assert fps == ["fp1", "fp2", "fp3"], fps
 
 
@@ -265,7 +291,7 @@ def test_streaming_drift_monitor(spark, tmp_path):
         trigger={"availableNow": True},
         on_result=lambda r, bid: results.append(r),
     )
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
     verdicts = sorted(bool(r.results[0].success) for r in results)
     assert verdicts == [False, True], [
         (r.results[0].success, r.results[0].result.get("observed_value"))
@@ -304,7 +330,7 @@ def test_streaming_drift_metrics_match_batch_stats(spark, events_stream_dir):
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(120)
+        assert q.awaitTermination(120)
         rows = spark.sql(f"SELECT * FROM {name}").collect()
         assert rows
         for r in rows:
@@ -356,7 +382,7 @@ def test_streaming_drift_metrics_per_partition(spark, events_stream_dir):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
     rows = spark.sql("SELECT * FROM drift_part").collect()
     assert rows and all(r["event_type"] is not None for r in rows)
     batch = spark.read.parquet(events_stream_dir)
@@ -408,7 +434,7 @@ def test_validate_stream_fires_actions_per_micro_batch(
             WebhookNotificationAction("https://h.invalid", transport=boom),
         ],
     )
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
     assert results and len(sent) == len(results)  # boom never killed a batch
     ev = sent[0]
     assert ev["event_type"] == "micro_batch_validated"
@@ -448,7 +474,7 @@ def test_validate_stream_image_suite_auto_enrich(spark, tmp_path):
         trigger={"availableNow": True},
         on_result=lambda r, bid: results.append(r),
     )
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
     assert len(results) >= 2  # maxFilesPerTrigger=1 over 3 files
     assert all(r.success for r in results)
     total = sum(r.results[0].result["element_count"] for r in results)
@@ -509,7 +535,7 @@ def test_validate_stream_kill_and_restart_exactly_once(
         trigger={"availableNow": True},
         on_result=lambda r, bid: replayed.append(bid),
     )
-    q2.awaitTermination(120)
+    assert q2.awaitTermination(120)
 
     # the failed batch replays with its original id; committed batch 0 does
     # not reprocess; the remaining batches follow in order
