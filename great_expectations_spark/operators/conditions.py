@@ -1,10 +1,11 @@
 """Map-expectation condition compiler.
 
 Each map expectation compiles to a boolean *expected* ``pyspark.sql.Column``
-(JVM-side, whole-stage-codegen friendly — never per-row Python). The planner
-derives from it:
+(JVM-side, whole-stage-codegen friendly — never per-row Python). Its ``unexpected``
+property is the one rule for violating rows, and every consumer (planner,
+violation rows, streaming metrics) ANDs it with ``row_domain``:
 
-    unexpected = domain_filter AND considered AND NOT expected
+    unexpected = row_domain AND considered AND NOT expected
 
 where ``considered`` encodes the null policy (column map: ``col IS NOT NULL``
 unless the expectation is about null-ness; pair/multicolumn: the
@@ -500,6 +501,15 @@ def translate_row_condition(row_condition: str, condition_parser: str = "spark")
     return col == num
 
 
+def row_domain(kwargs: dict) -> Column:
+    """The rows an expectation's ``row_condition`` (read with its
+    ``condition_parser``) keeps; every row when it has none."""
+    rc = kwargs.get("row_condition")
+    if not rc:
+        return F.lit(True)
+    return translate_row_condition(rc, kwargs.get("condition_parser", "spark"))
+
+
 def between_condition(
     col: Column,
     min_value: Any = None,
@@ -552,6 +562,12 @@ class MapCondition:
     # merged into the EVR result["details"] (non-BOOLEAN_ONLY formats) —
     # lets a builder surface scan provenance (e.g. PII patterns_version)
     extra_details: Optional[dict] = None
+
+    @property
+    def unexpected(self) -> Column:
+        """Rows that count and do not meet the expectation (a NULL verdict
+        is not a violation); AND it with ``row_domain`` for the domain."""
+        return self.considered & F.coalesce(~self.expected, F.lit(False))
 
     def sample_cast_column(self) -> Any:
         if self.cast_column != "auto":

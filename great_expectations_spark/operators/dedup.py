@@ -106,18 +106,6 @@ def char_shingles(col: Column, k: int = 5, normalized: bool = False) -> Column:
     return F.array_distinct(F.transform(starts, lambda s: norm.substr(s, F.lit(k))))
 
 
-def word_shingles(col: Column, k: int = 3, normalized: bool = False) -> Column:
-    """Hot paths: pre-materialize normalized text (see char_shingles note —
-    the toks expression inside the transform lambda re-evaluates per
-    element unless it is a plain column reference upstream)."""
-    toks = tokens(col if normalized else normalize_text(col))
-    n = F.size(toks)
-    starts = F.sequence(F.lit(0), F.greatest(n - F.lit(k), F.lit(0)), F.lit(1))
-    return F.array_distinct(
-        F.transform(starts, lambda s: F.concat_ws(" ", F.slice(toks, s + 1, k)))
-    )
-
-
 def _permutation_constants(num_hashes: int, seed: int = 1_000_003) -> list[tuple[int, int, int]]:
     """Deterministic (xor_pre, rot, xor_post) triples for bijective 64-bit
     mixing h -> rot(h ^ a, r) ^ b — shifts and xors only, so the expression
@@ -617,67 +605,6 @@ def token_jaccard_pairs(
         )
         .filter(F.col("jaccard") >= threshold)
     )
-
-
-# ---- Arrow-vectorized minhash kernel ------------------------------------
-
-
-def minhash_signatures_arrow(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_hashes: int = 64,
-    shingle_k: int = 5,
-) -> DataFrame:
-    """Arrow/numpy minhash kernel — same output shape as
-    ``minhash_signatures`` (id, sig array<long>), different hash family.
-
-    The JVM path pays one exploded row (carrying the normalized text) per
-    shingle; this kernel computes rolling-window polynomial hashes with numpy
-    stride tricks and applies all ``num_hashes`` xor-rotate permutations as a
-    broadcast matrix op — one Arrow batch in, one out, no explode/shuffle
-    before the per-doc signature exists. Prefer it when docs are long (many
-    shingles/doc); signatures from the two paths must not be mixed."""
-    import numpy as np
-    import pandas as pd
-
-    spark = df.sparkSession
-    rng = np.random.default_rng(1_000_003)
-    xor_pre = rng.integers(0, 1 << 63, size=num_hashes, dtype=np.uint64)
-    rots = np.array([(i * 37) % 63 + 1 for i in range(num_hashes)], dtype=np.uint64)
-    xor_post = rng.integers(0, 1 << 63, size=num_hashes, dtype=np.uint64)
-    # polynomial rolling-hash base powers for k bytes
-    base = np.uint64(1099511628211)
-    powers = np.array(
-        [base ** np.uint64(i) for i in range(shingle_k)], dtype=np.uint64
-    )
-    import re as _re
-    ws = _re.compile(r"\s+")
-
-    def gen(batches):
-        for pdf in batches:
-            ids, sigs = [], []
-            for doc_id, text in zip(pdf[id_col], pdf[text_col]):
-                norm = ws.sub(" ", (text or "").strip().lower())
-                data = np.frombuffer(norm.encode("utf-8"), dtype=np.uint8)
-                if len(data) < shingle_k:
-                    data = np.pad(data, (0, shingle_k - len(data)))
-                win = np.lib.stride_tricks.sliding_window_view(data, shingle_k)
-                h = (win.astype(np.uint64) * powers).sum(axis=1)  # (n_shingles,)
-                h = h[:, None] ^ xor_pre[None, :]  # (n_shingles, num_hashes)
-                h = (h << rots) | (h >> (np.uint64(64) - rots))
-                h ^= xor_post[None, :]
-                sig = h.min(axis=0).astype(np.int64)
-                ids.append(doc_id)
-                sigs.append(sig.tolist())
-            yield pd.DataFrame({id_col: ids, "sig": sigs})
-
-    out_schema = f"{id_col} long, sig array<long>"
-    src = df.select(id_col, text_col)
-    target = spark.sparkContext.defaultParallelism
-    if src.rdd.getNumPartitions() < target:
-        src = src.repartition(target, id_col)
-    return src.mapInPandas(gen, out_schema)
 
 
 # ---- near-dup clustering (pairs -> connected components -> canonical) ----

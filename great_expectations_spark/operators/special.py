@@ -1,6 +1,6 @@
 """Expectations needing their own physical pass: referential-integrity
-anti-joins, ordered (increasing/decreasing) checks, z-scores (two-phase),
-and user-SQL query expectations.
+anti-joins, ordered (increasing/decreasing) checks, z-scores (moments as one
+scalar subquery), and user-SQL query expectations.
 
 Referential integrity is NEW surface vs the reference (it has no join
 operator — SURVEY.md §2.B.7; multi-table checks exist only via user SQL):
@@ -23,6 +23,7 @@ from great_expectations_spark.core.result import (
     validate_metric_value_between,
     validate_mostly,
 )
+from great_expectations_spark.operators.conditions import MapCondition
 
 
 def _resolve_ref(planner: Any, kwargs: dict) -> DataFrame:
@@ -303,12 +304,13 @@ def _compile_monotonic(planner: Any, cfg: ExpectationConfiguration, increasing: 
 
 
 def _compile_z_scores(planner: Any, cfg: ExpectationConfiguration) -> None:
-    """expect_column_value_z_scores_to_be_less_than — two-phase.
+    """expect_column_value_z_scores_to_be_less_than.
 
-    Phase 0 resolves mean/stddev (bundled with any other prerequisites in one
-    agg); the z-condition is then folded into the main pass as literals
-    (reference models the same cross-metric dependency at
-    column_values_z_score.py:113-127).
+    The reference resolves mean and stddev as metrics before the z condition
+    (column_values_z_score.py:113-127). Here they are one scalar subquery of
+    the batch inside the main pass: Catalyst's MergeScalarSubqueries folds
+    the moments of every z-score in the suite into one aggregate, run once
+    and reused, so per-partition verdicts use the whole batch's moments.
 
     Deliberate divergence on degenerate domains (stddev undefined — fewer
     than two non-null values — or zero): this engine fails explicitly with
@@ -325,41 +327,34 @@ def _compile_z_scores(planner: Any, cfg: ExpectationConfiguration) -> None:
     mostly = validate_mostly(kw.get("mostly"))
     dom, dom_id = planner._domain(cfg)
     col = F.col(column)
-    a_mean = planner._reg_pre(("column.mean", dom_id, column), F.avg(F.when(dom, col)))
-    a_std = planner._reg_pre(
-        ("column.standard_deviation", dom_id, column), F.stddev_samp(F.when(dom, col))
+    mean = planner.df.select(F.avg(F.when(dom, col)).cast("double")).scalar()
+    std = planner.df.select(F.stddev_samp(F.when(dom, col))).scalar()
+    # try_divide: a zero or NULL stddev gives NULL, not an ANSI error; such
+    # a domain is decided as degenerate below
+    z = F.try_divide(col - mean, std)
+    expected = (F.abs(z) < threshold) if double_sided else (z < threshold)
+    mc = MapCondition(expected=expected, considered=col.isNotNull(), value_expr=col)
+    unexpected_cond = dom & mc.unexpected
+    a_unexp = planner._reg(
+        ("z_unexpected", dom_id, cfg.id), F.count(F.when(unexpected_cond, F.lit(1)))
     )
+    a_std = planner._reg(("z_stddev", dom_id, column), F.max(std))
     a_elem = planner._reg(("element_count", dom_id), F.count(F.when(dom, F.lit(1))))
     a_nonnull = planner._reg(("nonnull", dom_id, column), F.count(F.when(dom, col)))
-    state: dict[str, str] = {}
     eid = cfg.id
     rf = planner.rf
-
-    def finalize(pre_metrics: dict) -> None:
-        mean = pre_metrics[a_mean]
-        std = pre_metrics[a_std]
-        if mean is None or std is None or std == 0:
-            state["degenerate"] = "stddev is zero or undefined"
-            return
-        z = (col - F.lit(float(mean))) / F.lit(float(std))
-        expected = (F.abs(z) < threshold) if double_sided else (z < threshold)
-        unexpected_cond = dom & col.isNotNull() & F.coalesce(~expected, F.lit(False))
-        state["a_unexp"] = planner._reg(
-            ("z_unexpected", dom_id, eid), F.count(F.when(unexpected_cond, F.lit(1)))
-        )
-        if rf["result_format"] != "BOOLEAN_ONLY":
-            planner._sample_specs.append(
-                (eid, unexpected_cond, col, column, state["a_unexp"])
-            )
-
-    planner._deferred.append(finalize)
+    if rf["result_format"] != "BOOLEAN_ONLY":
+        planner._sample_specs.append((eid, unexpected_cond, col, column, a_unexp))
 
     def decide(ctx) -> tuple[bool, dict]:
-        if "degenerate" in state:
-            return False, {"observed_value": None, "details": {"error": state["degenerate"]}}
+        if not ctx.metrics[a_std]:
+            return False, {
+                "observed_value": None,
+                "details": {"error": "stddev is zero or undefined"},
+            }
         elem = ctx.metrics[a_elem] or 0
         nonnull = ctx.metrics[a_nonnull] or 0
-        unexpected = ctx.metrics[state["a_unexp"]] or 0
+        unexpected = ctx.metrics[a_unexp] or 0
         success = (
             True
             if elem == 0 or nonnull == 0

@@ -5,8 +5,6 @@ Physical plan for a suite (contrast: the reference runs one job per metric
 bundle per domain + one eager job per VALUE metric —
 sparkdf_execution_engine.py:649-743, map_metric_provider.py:2356-2506):
 
-  pass 0 (optional)  df.agg(...)                     prerequisites (z-score
-                                                     mean/stddev, auto bins)
   pass 1 (main)      GROUPING SETS ((parts...),())   EVERY bundled aggregate
                        .agg(*all_metric_exprs)       metric for EVERY
                                                      expectation — counts,
@@ -29,6 +27,10 @@ sparkdf_execution_engine.py:649-743, map_metric_provider.py:2356-2506):
   special passes     anti-joins (referential),       per expectation that
                      ordered windows (increasing)    needs them
 
+A z-score's moments are one scalar subquery inside the main pass: Catalyst
+merges the moments of every z-score into one aggregate that the bundle runs
+first, so no pass waits on an earlier one.
+
 Metric identity dedup (reference: validator/metric_configuration.py:64-69,
 validation_graph.py:37-42) happens in ``_reg``: two expectations needing
 ``column.min(l_quantity)`` share one aggregate expression.
@@ -47,6 +49,7 @@ holds is never persisted or released here.
 
 from __future__ import annotations
 
+import functools
 import json
 import math
 import re
@@ -77,7 +80,7 @@ from great_expectations_spark.operators.conditions import (
     _MAP_BUILDERS,
     _ignore_row_if_considered,
     compile_map_condition,
-    translate_row_condition,
+    row_domain,
 )
 from great_expectations_spark.profiler import (
     auto_history_key,
@@ -226,6 +229,23 @@ class _Item:
     partition_capable: bool = True  # can emit per-partition verdicts
 
 
+def _exception_evr(
+    cfg: ExpectationConfiguration, err: Exception
+) -> ExpectationValidationResult:
+    """The failed EVR of an expectation that raised err (reference
+    catch_exceptions semantics)."""
+    return ExpectationValidationResult(
+        success=False,
+        expectation_config=cfg.to_dict(),
+        result={},
+        exception_info={
+            "raised_exception": True,
+            "exception_message": f"{type(err).__name__}: {err}",
+            "exception_traceback": None,
+        },
+    )
+
+
 class SuitePlanner:
     def __init__(
         self,
@@ -275,14 +295,12 @@ class SuitePlanner:
         # pairs after map-side dedup.
         self._distinct_aggs: dict[str, Column] = {}
         self._main_keys: dict[str, str] = {}  # key-json -> alias
-        self._pre_aggs: dict[str, Column] = {}
         self._groupby_needs: dict[tuple, _GroupByNeed] = {}
         self._sample_specs: list[tuple[str, Column, Column, Optional[str], Optional[str]]] = []
         # (eid, unexpected_cond, value_expr, column_for_cast, unexpected_alias)
         # unexpected_alias: main-pass metric alias; branches with a known-zero
         # global unexpected count are skipped in the sample pass
         self._items: list[_Item] = []
-        self._deferred: list[Callable[[], None]] = []  # phase-2 compile (z-score)
         self._errors: list[tuple[ExpectationConfiguration, Exception]] = []
         self._n_partitions = 1  # partitions the main pass found (run())
 
@@ -308,12 +326,6 @@ class SuitePlanner:
             target[alias] = expr.alias(alias)
         return alias
 
-    def _reg_pre(self, key_parts: tuple, expr: Column) -> str:
-        alias = "p_" + deterministic_id(json.dumps([str(p) for p in key_parts]))
-        if alias not in self._pre_aggs:
-            self._pre_aggs[alias] = expr.alias(alias)
-        return alias
-
     def _need_groupby(
         self,
         cols: tuple[str, ...],
@@ -334,12 +346,8 @@ class SuitePlanner:
         return key
 
     def _domain(self, cfg: ExpectationConfiguration) -> tuple[Column, str]:
-        rc = cfg.kwargs.get("row_condition")
-        if rc:
-            return (
-                translate_row_condition(rc, cfg.kwargs.get("condition_parser", "spark")),
-                cfg.domain_id,
-            )
+        if cfg.kwargs.get("row_condition"):
+            return row_domain(cfg.kwargs), cfg.domain_id
         return F.lit(True), "whole"
 
     def _rc_domain(self, cfg: ExpectationConfiguration) -> tuple[Optional[Column], str]:
@@ -352,7 +360,7 @@ class SuitePlanner:
             return None, "whole"
         parser = cfg.kwargs.get("condition_parser", "spark")
         return (
-            translate_row_condition(rc, parser),
+            row_domain(cfg.kwargs),
             deterministic_id({"row_condition": rc, "condition_parser": parser}),
         )
 
@@ -485,7 +493,7 @@ class SuitePlanner:
             else ("nonnull", dom_id, ",".join(mc.columns)),
             F.count(F.when(dom & mc.considered, F.lit(1))),
         )
-        unexpected_cond = dom & mc.considered & F.coalesce(~mc.expected, F.lit(False))
+        unexpected_cond = dom & mc.unexpected
         a_unexp = self._reg(
             ("unexpected", dom_id, cfg.id), F.count(F.when(unexpected_cond, F.lit(1)))
         )
@@ -534,18 +542,13 @@ class SuitePlanner:
     def _passes(self) -> Optional[list[tuple[list[Column], list[Column]]]]:
         """What each pass run() makes over the input reads, as (aggregate
         Columns, row-level Columns); the sample pass counts although it is
-        skipped when nothing fails. None when a pass reads whole rows or
-        registers its expressions only after phase 0. A new pass in run()
-        must be listed here too: the call's cache holds only the columns
-        listed."""
-        if self._deferred or (
-            self._sample_specs and self.rf.get("include_unexpected_rows")
-        ):
+        skipped when nothing fails. None when a pass reads whole rows. A new
+        pass in run() must be listed here too: the call's cache holds only
+        the columns listed."""
+        if self._sample_specs and self.rf.get("include_unexpected_rows"):
             return None
         keys = [F.col(c) for c in self.partition_by]
         passes: list[tuple[list[Column], list[Column]]] = []
-        if self._pre_aggs:
-            passes.append((list(self._pre_aggs.values()), []))
         for aggs in (self._main_aggs, self._distinct_aggs):
             if aggs:
                 passes.append((list(aggs.values()), keys))
@@ -599,7 +602,7 @@ class SuitePlanner:
         # the finally below is the ONLY release of the persist: success, the
         # isolation fallback and every re-raise all leave through it
         try:
-            # phases 0-3 share one failure contract. A single type-broken
+            # phases 1-3 share one failure contract. A single type-broken
             # expectation fails a WHOLE pass (e.g. avg() over a string column
             # raises at analysis time in the bundled job) — on any pass
             # failure fall back to per-expectation isolation so the broken one
@@ -607,12 +610,6 @@ class SuitePlanner:
             # gets this for free from its one-job-per-metric model), or
             # re-raise under catch_exceptions=False
             try:
-                # phase 0: prerequisites (z-score etc.)
-                if self._pre_aggs:
-                    pre_metrics = df.agg(*self._pre_aggs.values()).collect()[0].asDict()
-                    for fin in self._deferred:
-                        fin(pre_metrics)  # type: ignore[call-arg]
-
                 # phase 1: the bundled main pass (+ isolated distinct bundle)
                 global_metrics, partition_rows = self._run_bundles(df)
 
@@ -669,19 +666,7 @@ class SuitePlanner:
             if cache is not None:
                 df.unpersist()
 
-        for cfg, err in self._errors:
-            results.append(
-                ExpectationValidationResult(
-                    success=False,
-                    expectation_config=cfg.to_dict(),
-                    result={},
-                    exception_info={
-                        "raised_exception": True,
-                        "exception_message": f"{type(err).__name__}: {err}",
-                        "exception_traceback": None,
-                    },
-                )
-            )
+        results.extend(_exception_evr(cfg, err) for cfg, err in self._errors)
 
         success = all(r.success for r in results)
         # resolved metrics keyed by their human-readable identity (the _reg
@@ -755,19 +740,9 @@ class SuitePlanner:
         results: list[ExpectationValidationResult] = []
         partition_results: list[ExpectationValidationResult] = []
         if len(self.suite.expectations) <= 1:
-            for cfg in self.suite.expectations:
-                results.append(
-                    ExpectationValidationResult(
-                        success=False,
-                        expectation_config=cfg.to_dict(),
-                        result={},
-                        exception_info={
-                            "raised_exception": True,
-                            "exception_message": f"{type(bundle_error).__name__}: {bundle_error}",
-                            "exception_traceback": None,
-                        },
-                    )
-                )
+            results.extend(
+                _exception_evr(cfg, bundle_error) for cfg in self.suite.expectations
+            )
         else:
             for cfg in self.suite.expectations:
                 sub = SuitePlanner(
@@ -803,40 +778,42 @@ class SuitePlanner:
         except Exception as e:
             if not self.catch_exceptions:
                 raise
-            return ExpectationValidationResult(
-                success=False,
-                expectation_config=item.cfg.to_dict(),
-                result={},
-                exception_info={
-                    "raised_exception": True,
-                    "exception_message": f"{type(e).__name__}: {e}",
-                    "exception_traceback": None,
-                },
-            )
+            return _exception_evr(item.cfg, e)
 
     def _run_unexpected_rows(self, df: DataFrame, ctx: _Ctx) -> None:
         """include_unexpected_rows → full violating rows (capped at
         partial_unexpected_count) per failing expectation, one unioned job
         (reference: expectation.py:2687-2692). The uncapped path is
         plans/violations.py → write to a table."""
-        import json as _json
-
-        n = self.rf["partial_unexpected_count"]
+        specs = self._failing_specs(ctx)
+        if not specs:
+            return
         row_json = F.to_json(F.struct(*[F.col(c) for c in df.columns]))
+        for r in self._first_unexpected(df, specs, lambda value: row_json).collect():
+            ctx.sample_rows.setdefault(r["_eid"], []).append(json.loads(r["_x"]))
+
+    def _failing_specs(self, ctx: _Ctx) -> list:
+        """The sample specs whose expectation has unexpected rows: the main
+        pass already counted them, so a zero count needs no sample query."""
+        return [
+            s for s in self._sample_specs
+            if s[4] is None or (ctx.metrics.get(s[4]) or 0) > 0
+        ]
+
+    def _first_unexpected(
+        self, df: DataFrame, specs: list, project: Callable[[Column], Column]
+    ) -> DataFrame:
+        """(_eid, _x = project(value)) for up to partial_unexpected_count
+        unexpected rows of each spec, one union of limits. The caller
+        collects it, so the job is attributed to the caller's pass."""
+        n = self.rf["partial_unexpected_count"]
         branches = [
             df.filter(cond)
-            .select(F.lit(eid).alias("_eid"), row_json.alias("_row"))
+            .select(F.lit(eid).alias("_eid"), project(value).alias("_x"))
             .limit(n)
-            for eid, cond, _, _, a_unexp in self._sample_specs
-            if a_unexp is None or (ctx.metrics.get(a_unexp) or 0) > 0
+            for eid, cond, value, _, _ in specs
         ]
-        if not branches:
-            return
-        unioned = branches[0]
-        for b in branches[1:]:
-            unioned = unioned.unionAll(b)
-        for r in unioned.collect():
-            ctx.sample_rows.setdefault(r["_eid"], []).append(_json.loads(r["_row"]))
+        return functools.reduce(DataFrame.unionAll, branches)
 
     def _run_groupby(self, df: DataFrame, need: _GroupByNeed) -> _GroupByResult:
         rows = need.rows()
@@ -961,31 +938,13 @@ class SuitePlanner:
     def _run_samples(self, df: DataFrame, ctx: _Ctx) -> None:
         level = self.rf["result_format"]
         partial_n = self.rf["partial_unexpected_count"]
-        # the main pass already counted violations — branches whose global
-        # unexpected_count is 0 cannot produce sample rows; pruning them
-        # makes the happy path (all expectations pass) sample-free
-        specs = [
-            s
-            for s in self._sample_specs
-            if s[4] is None or (ctx.metrics.get(s[4]) or 0) > 0
-        ]
+        specs = self._failing_specs(ctx)
         if not specs:
             return
         casters = {eid: _caster_for(df, col) for eid, _, _, col, _ in specs}
         if level == "BASIC":
-            branches = [
-                df.filter(cond)
-                .select(
-                    F.lit(eid).alias("_eid"), value.cast("string").alias("_val")
-                )
-                .limit(partial_n)
-                for eid, cond, value, _, _ in specs
-            ]
-            unioned = branches[0]
-            for b in branches[1:]:
-                unioned = unioned.unionAll(b)
-            for r in unioned.collect():
-                v = None if r["_val"] is None else casters[r["_eid"]](r["_val"])
+            for r in self._first_unexpected(df, specs, lambda v: v.cast("string")).collect():
+                v = None if r["_x"] is None else casters[r["_eid"]](r["_x"])
                 ctx.sample_values.setdefault(r["_eid"], []).append(v)
         else:  # SUMMARY / COMPLETE — exact value counts per expectation.
             # ONE labeled scan (the violations_df plan shape): every failing

@@ -20,23 +20,33 @@ from great_expectations_spark.core.config import ExpectationSuite
 from great_expectations_spark.operators.conditions import (
     compile_map_condition,
     is_map_expectation,
-    translate_row_condition,
+    row_domain,
 )
 
 VIOLATIONS_COL = "_violated_expectations"
 
 
-def _unexpected_condition(cfg) -> Optional[Column]:
-    if not is_map_expectation(cfg.expectation_type):
-        return None
-    mc = compile_map_condition(cfg.expectation_type, cfg.kwargs)
-    rc = cfg.kwargs.get("row_condition")
-    dom = (
-        translate_row_condition(rc, cfg.kwargs.get("condition_parser", "spark"))
-        if rc
-        else F.lit(True)
-    )
-    return dom & mc.considered & F.coalesce(~mc.expected, F.lit(False))
+def unexpected_conditions(
+    suite: ExpectationSuite, label_by: str = "type"
+) -> list[tuple[str, Column]]:
+    """(label, unexpected-row condition) for each map expectation of the
+    suite, in suite order. ``label_by``: "type" → expectation_type, with
+    ``#i`` suffixes on repeated types; "id" → deterministic config ids."""
+    labeled: list[tuple[str, Column]] = []
+    seen: dict[str, int] = {}
+    for cfg in suite.expectations:
+        t = cfg.expectation_type
+        if not is_map_expectation(t):
+            continue
+        if label_by == "id":
+            label = cfg.id
+        else:
+            n = seen.get(t, 0)
+            seen[t] = n + 1
+            label = t if n == 0 else f"{t}#{n}"
+        mc = compile_map_condition(t, cfg.kwargs)
+        labeled.append((label, row_domain(cfg.kwargs) & mc.unexpected))
+    return labeled
 
 
 def violations_df(
@@ -48,26 +58,13 @@ def violations_df(
     """Rows violating ≥1 map expectation, with ``_violated_expectations``
     (array<string>) naming which.
 
-    ``label_by``: "type" → expectation_type strings (duplicate types get
-    ``#i`` suffixes), "id" → deterministic config ids.
+    ``label_by``: as in ``unexpected_conditions``.
     ``columns``: project to these columns (+ label col); default all —
     pass the key columns at scale so the violations table stays narrow.
     One scan, no shuffle, no driver collect; Catalyst prunes unreferenced
     columns and pushes shared sub-conditions into one WholeStageCodegen span.
     """
-    labeled: list[tuple[str, Column]] = []
-    seen: dict[str, int] = {}
-    for cfg in suite.expectations:
-        cond = _unexpected_condition(cfg)
-        if cond is None:
-            continue
-        if label_by == "id":
-            label = cfg.id
-        else:
-            n = seen.get(cfg.expectation_type, 0)
-            seen[cfg.expectation_type] = n + 1
-            label = cfg.expectation_type if n == 0 else f"{cfg.expectation_type}#{n}"
-        labeled.append((label, cond))
+    labeled = unexpected_conditions(suite, label_by)
     if not labeled:
         empty = df.limit(0)
         return empty.withColumn(VIOLATIONS_COL, F.array().cast("array<string>"))

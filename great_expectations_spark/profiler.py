@@ -52,7 +52,7 @@ from pyspark.sql import functions as F
 
 from great_expectations_spark.core.config import ExpectationSuite, deterministic_id
 from great_expectations_spark.functions.stats import bootstrap_range_estimate
-from great_expectations_spark.operators.conditions import translate_row_condition
+from great_expectations_spark.operators.conditions import row_domain
 from great_expectations_spark.operators.partition import (
     build_categorical_partition_object,
     build_partition_object,
@@ -149,11 +149,13 @@ def fetch_metric_histories(
     ``suite_name`` scopes the history to one suite's runs — without it a
     shared store root would mix histories from every suite writing the same
     metric key (e.g. two tables' ``table.row_count``), bootstrapping bounds
-    from the WRONG table's volumes. Max-per-(run, key) collapses retried
-    appends: the store is append-only, so a retried run can have written
-    the same row twice. Keys with fewer than ``min_runs`` usable runs are
-    omitted. The collect is one row per (key, run) — bounded by run count,
-    not data size."""
+    from the WRONG table's volumes. A run counts only when its rows for a
+    key agree (min == max): the store is append-only, so a retried run can
+    have written the same row twice, which collapses to one value, while a
+    run whose partition slices were stored without a partition key holds
+    one differing row per slice, none of them the table's value. Keys with
+    fewer than ``min_runs`` usable runs are omitted. The collect is one row
+    per (key, run) — bounded by run count, not data size."""
     if not keys:
         return {}
     try:
@@ -166,14 +168,15 @@ def fetch_metric_histories(
     )
     if suite_name is not None:
         m = m.filter(F.col("suite_name") == suite_name)
+    v = F.col("value").try_cast("double")
     per_run = m.groupBy("metric_key", "run_id").agg(
-        F.max(F.col("value").try_cast("double")).alias("_v")
+        F.min(v).alias("_lo"), F.max(v).alias("_v")
     )
     out: dict[str, list[float]] = {}
     # in run-id order: the grouped rows arrive in any order, and a seeded
     # bootstrap over the history must see the same sequence every time
     for r in sorted(per_run.collect(), key=lambda r: str(r["run_id"])):
-        if r["_v"] is not None:
+        if r["_v"] is not None and r["_lo"] == r["_v"]:
             out.setdefault(r["metric_key"], []).append(r["_v"])
     return {k: v for k, v in out.items() if len(v) >= min_runs}
 
@@ -217,13 +220,12 @@ def resolve_auto(
     types without an auto rule."""
     kw = {k: v for k, v in kwargs.items() if k != "auto"}
     t, domain = expectation_type, _col_domain(kw.get("column"))
-    rc = kw.get("row_condition")
-    if rc:
+    if kw.get("row_condition"):
         # estimate from the SAME domain validation will measure (reference
         # metrics carry row_condition in their domain kwargs); the history
         # key carries the row_condition id (auto_history_key), matching the
         # rc-suffixed _reg key the planner stores conditioned values under
-        df = df.filter(translate_row_condition(rc, kw.get("condition_parser", "spark")))
+        df = df.filter(row_domain(kw))
     engine = _RuleMetricEngine([df])
 
     if t in _VALUE_SET_TYPES:

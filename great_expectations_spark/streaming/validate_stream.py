@@ -23,11 +23,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from great_expectations_spark.core.config import ExpectationSuite
-from great_expectations_spark.operators.conditions import (
-    compile_map_condition,
-    is_map_expectation,
-    translate_row_condition,
-)
+from great_expectations_spark.plans.violations import unexpected_conditions
 
 
 def validation_sink(
@@ -134,23 +130,8 @@ def streaming_metrics(
     """
     stream_df, win = _event_window(stream_df, ts_col, window_duration, slide_duration)
     aggs = [F.count(F.lit(1)).alias("element_count")]
-    seen: dict[str, int] = {}
-    for cfg in suite.expectations:
-        if not is_map_expectation(cfg.expectation_type):
-            continue
-        mc = compile_map_condition(cfg.expectation_type, cfg.kwargs)
-        unexpected = mc.considered & F.coalesce(~mc.expected, F.lit(False))
-        rc = cfg.kwargs.get("row_condition")
-        if rc:
-            # same domain restriction the batch planner applies
-            # (plans/planner.py _domain) — without it the window counts
-            # out-of-domain rows as unexpected
-            unexpected = translate_row_condition(
-                rc, cfg.kwargs.get("condition_parser", "spark")
-            ) & unexpected
-        n = seen.get(cfg.expectation_type, 0)
-        seen[cfg.expectation_type] = n + 1
-        label = cfg.expectation_type if n == 0 else f"{cfg.expectation_type}#{n}"
+    # the batch planner's rule, row_condition domain included
+    for label, unexpected in unexpected_conditions(suite):
         aggs.append(F.sum(F.when(unexpected, 1).otherwise(0)).alias(f"{label}_unexpected"))
     return (
         stream_df.withWatermark(ts_col, watermark_delay)

@@ -10,6 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from great_expectations_spark import SparkValidationEngine
+from great_expectations_spark.core.config import ExpectationSuite
 from great_expectations_spark.operators.images import enrich_images
 from great_expectations_spark.testing.images import distributed_images_df
 from perfbench.workloads import canonical, image_suite
@@ -101,3 +102,36 @@ def test_basic_samples_match_unpersisted_on_one_partition(spark, image_inputs):
             assert all(v in pool for v in la)
             sampled += len(la)
     assert sampled > 0
+
+
+@pytest.mark.parametrize("partition_by", [None, ["p"]])
+@pytest.mark.parametrize("threshold, passes", [(1.5, 3), (10.0, 2)])
+def test_zscore_suite_kernel_rows_per_call(spark, partition_by, threshold, passes):
+    # a z-score suite is covered by the call cache: the bundle fills it and
+    # the moments subquery reads the input once more (2N); the sample query
+    # re-runs the subquery only when the z-score has unexpected rows (3N).
+    # `id` is read by no pass, so the cache is a projection of the input
+    seen = spark.sparkContext.accumulator(0)
+
+    @F.pandas_udf("double")
+    def tap(s: pd.Series) -> pd.Series:
+        seen.add(len(s))
+        return s
+
+    df = (
+        spark.range(N, numPartitions=4)
+        .select("id", (F.col("id") % 11).cast("double").alias("x"), (F.col("id") % 3).alias("p"))
+        .withColumn("x", tap(F.col("x")))
+    )
+    suite = ExpectationSuite("zscore_kernel")
+    suite.add("expect_column_value_z_scores_to_be_less_than", column="x", threshold=threshold)
+    suite.add("expect_column_values_to_be_between", column="x", min_value=0, max_value=8)
+    suite.add("expect_column_most_common_value_to_be_in_set", column="x", value_set=[0.0])
+    res = SparkValidationEngine(spark).validate(
+        df, suite, result_format="SUMMARY", partition_by=partition_by
+    )
+    z = res.results[0]
+    assert not z.exception_info["raised_exception"]
+    assert (z.result["unexpected_count"] > 0) == (passes == 3)
+    assert res.results[1].result["unexpected_count"] > 0
+    assert seen.value == passes * N

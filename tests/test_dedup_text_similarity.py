@@ -330,33 +330,6 @@ def test_embedding_near_dup_pairs(spark):
     assert got <= exact
 
 
-def test_minhash_arrow_kernel_matches_lsh_pipeline(spark):
-    """Arrow/numpy minhash kernel plugs into the same LSH machinery and finds
-    the injected near-dups of the synthetic corpus."""
-    from great_expectations_spark.operators.dedup import (
-        minhash_estimate_jaccard,
-        minhash_lsh_candidates,
-        minhash_signatures_arrow,
-    )
-    from great_expectations_spark.testing.documents import distributed_documents_df
-
-    d = distributed_documents_df(spark, 2000, partitions=8)
-    sigs = minhash_signatures_arrow(d).persist()
-    assert sigs.count() == 2000
-    row = sigs.first()
-    assert len(row["sig"]) == 64
-    cands = minhash_lsh_candidates(sigs, bands=8, rows_per_band=8)
-    est = minhash_estimate_jaccard(sigs, cands)
-    pairs = est.filter(est.est_jaccard >= 0.8).collect()
-    sigs.unpersist()
-    found = {(r["a"], r["b"]) for r in pairs}
-    # exact dups (id%97==0 copies id-1) must be found with est_jaccard ~1
-    expected_exact = {
-        (i - 1, i) for i in range(1, 2000) if i % 97 == 0 and (i - 1) % 31 != 0
-    }
-    assert expected_exact <= found
-
-
 def test_distributed_documents_deterministic(spark):
     from great_expectations_spark.testing.documents import distributed_documents_df
 

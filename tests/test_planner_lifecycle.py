@@ -99,14 +99,14 @@ def test_partition_enumeration_failure_releases_persist(spark):
 
 
 @pytest.mark.parametrize(
-    "phase", ["prerequisite", "_run_bundles", "_run_groupby", "_run_samples", "_decide"]
+    "phase", ["_run_bundles", "_run_groupby", "_run_samples", "_decide"]
 )
 @pytest.mark.parametrize("catch", [True, False])
 def test_every_phase_failure_releases_persist(spark, monkeypatch, phase, catch):
     df = spark.createDataFrame([(float(i % 7),) for i in range(40)], ["x"])
     suite = ExpectationSuite("phases")
-    # z-score -> prerequisite pass; between -> bundle + sample pass (values
-    # above 3 fail); most-common -> groupBy pass
+    # z-score (its moments subquery) and between -> bundle + sample pass
+    # (values above 3 fail); most-common -> groupBy pass
     suite.add("expect_column_value_z_scores_to_be_less_than", column="x", threshold=4.0)
     suite.add("expect_column_values_to_be_between", column="x", min_value=0, max_value=3)
     suite.add("expect_column_most_common_value_to_be_in_set", column="x", value_set=[0.0])
@@ -116,19 +116,7 @@ def test_every_phase_failure_releases_persist(spark, monkeypatch, phase, catch):
     def boom(*args, **kwargs):
         raise RuntimeError(msg)
 
-    if phase == "prerequisite":
-        # the phase-0 agg is inline in run(); its deferred finalisers run
-        # right after it, so an appended one fails phase 0 from inside
-        compile_ = planner_mod.SuitePlanner.compile
-
-        def compile_then_fail_prereq(self):
-            compile_(self)
-            self._deferred.append(boom)
-            return self
-
-        monkeypatch.setattr(planner_mod.SuitePlanner, "compile", compile_then_fail_prereq)
-    else:
-        monkeypatch.setattr(planner_mod.SuitePlanner, phase, boom)
+    monkeypatch.setattr(planner_mod.SuitePlanner, phase, boom)
 
     eng = SparkValidationEngine(spark)
     mark = _rdd_mark(spark)

@@ -598,3 +598,27 @@ def test_metric_histories_come_in_run_order(spark):
     metrics = spark.createDataFrame(rows, schema=METRICS_SCHEMA).repartition(4)
     got = fetch_metric_histories(_MetricsTable(metrics), [key], min_runs=2)
     assert got == {json.dumps(key): [100.0 + j for j in range(20)]}
+
+
+def test_metric_histories_skip_runs_with_disagreeing_rows(spark):
+    """A run whose NULL-keyed rows disagree (partition slices stored without
+    a partition key) gives no table value and is left out; a run that wrote
+    one value twice (a retried append) counts once."""
+    import json
+
+    from great_expectations_spark.profiler import fetch_metric_histories
+    from great_expectations_spark.sources.stores import METRICS_SCHEMA
+
+    key = json.dumps(["table.row_count"])
+    rows = [
+        ("r1", "s", key, None, "100"),
+        ("r2", "s", key, None, "110"),
+        ("r2", "s", key, None, "110"),
+        ("r3", "s", key, None, "40"),
+        ("r3", "s", key, None, "35"),
+        ("r3", "s", key, None, "25"),
+        ("r4", "s", key, None, "120"),
+    ]
+    metrics = spark.createDataFrame(rows, schema=METRICS_SCHEMA)
+    got = fetch_metric_histories(_MetricsTable(metrics), [["table.row_count"]], min_runs=2)
+    assert got == {key: [100.0, 110.0, 120.0]}

@@ -235,6 +235,23 @@ def main() -> int:
         # "percentile" is "_")
     )
 
+    # z-score moments: the mean and stddev of every z-score merge into one
+    # scalar subquery that the bundle reuses wherever it reads them — two
+    # scans in all (the bundle's and the moments'), and no join.
+    s6 = ExpectationSuite(name="zscore_moments")
+    s6.add("expect_column_value_z_scores_to_be_less_than", column="l_quantity", threshold=3.0)
+    s6.add("expect_column_value_z_scores_to_be_less_than", column="l_extendedprice", threshold=3.0)
+    s6.add("expect_column_values_to_be_between", column="l_discount", min_value=0, max_value=0.1)
+    p6 = SuitePlanner(li, s6).compile()
+    plan = _plan(li.agg(*p6._main_aggs.values()))
+    scans = plan.count("FileScan parquet")
+    if scans != 2 or "ReusedSubquery" not in plan or "Cartesian" in plan or "NestedLoop" in plan:
+        FAILURES.append("zscore_moments_one_subquery")
+        print(f"FAIL zscore_moments_one_subquery: {scans} parquet scans")
+        print(plan[:1500])
+    else:
+        print("ok   zscore_moments_one_subquery (2 scans, moments subquery reused)")
+
     # top_ngrams: partial agg before the gram shuffle + heap top-k, no
     # global Sort node.
     plan = _plan(text.top_ngrams(docs, n=2, k=10))
