@@ -146,6 +146,45 @@ def format_map_output(
     return out
 
 
+def map_verdict(
+    result_format: dict[str, Any],
+    mostly: float,
+    element_count: int,
+    considered: int,
+    unexpected_count: int,
+    unexpected_list: Optional[list[Any]] = None,
+    unexpected_rows: Optional[list[Any]] = None,
+    value_counts: Optional[list[tuple[Any, int]]] = None,
+    details: Optional[dict[str, Any]] = None,
+) -> tuple[bool, dict[str, Any]]:
+    """(success, result) of a column-map expectation: the reference's
+    _mostly_success over the considered rows plus _format_map_output
+    (expectations/expectation.py:2619-2780). BOOLEAN_ONLY returns no result
+    fields. value_counts, the exact (value, count) pairs of the unexpected
+    values in descending count order, replaces the counts tallied from the
+    capped unexpected_list; details merge into result["details"]."""
+    success = mostly_success(considered, unexpected_count, mostly)
+    if result_format["result_format"] == "BOOLEAN_ONLY":
+        return success, {}
+    result = format_map_output(
+        result_format,
+        success,
+        element_count,
+        considered,
+        unexpected_count,
+        unexpected_list=unexpected_list,
+        unexpected_rows=unexpected_rows,
+    )["result"]
+    if value_counts is not None:
+        result["partial_unexpected_counts"] = [
+            {"value": v, "count": c}
+            for v, c in value_counts[: result_format["partial_unexpected_count"]]
+        ]
+    if details:
+        result["details"] = {**result.get("details", {}), **details}
+    return success, result
+
+
 def validate_metric_value_between(
     metric_value: Any,
     min_value: Any = None,

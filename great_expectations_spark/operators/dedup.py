@@ -90,22 +90,6 @@ def exact_dedup(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -
 # ---- shingles / minhash LSH --------------------------------------------
 
 
-def char_shingles(col: Column, k: int = 5, normalized: bool = False) -> Column:
-    """Distinct k-char shingles of the normalized text (native sequence +
-    transform + substr).
-
-    IMPORTANT: expressions referenced inside a ``transform`` lambda are
-    re-evaluated PER ELEMENT — inlining ``normalize_text`` here would run its
-    regexp once per shingle (~300× per doc). Callers on a hot path must
-    materialize the normalized text as a column in a prior projection and
-    pass ``normalized=True`` (projections keep the alias separate because the
-    reference is non-cheap and used multiple times)."""
-    norm = col if normalized else normalize_text(col)
-    n = F.length(norm)
-    starts = F.sequence(F.lit(1), F.greatest(n - F.lit(k) + 1, F.lit(1)), F.lit(1))
-    return F.array_distinct(F.transform(starts, lambda s: norm.substr(s, F.lit(k))))
-
-
 def _permutation_constants(num_hashes: int, seed: int = 1_000_003) -> list[tuple[int, int, int]]:
     """Deterministic (xor_pre, rot, xor_post) triples for bijective 64-bit
     mixing h -> rot(h ^ a, r) ^ b — shifts and xors only, so the expression

@@ -24,8 +24,6 @@ from pyspark.sql import types as T
 
 from great_expectations_spark.core.config import ExpectationConfiguration
 from great_expectations_spark.functions.stats import (
-    adjust_expected_weights,
-    chi2_sf,
     chi_square_test,
     crosstab_binner,
     crosstab_phi,
@@ -410,11 +408,6 @@ def _compile_kl(planner: Any, cfg: ExpectationConfiguration) -> None:
     planner._add_item(cfg, decide, partition_capable=True)
 
 
-def _fracs(counts: list[int]) -> list[float]:
-    t = sum(counts)
-    return [c / t if t else 0.0 for c in counts]
-
-
 def _compile_chi_square(planner: Any, cfg: ExpectationConfiguration) -> None:
     kw = cfg.kwargs
     column = kw["column"]
@@ -530,8 +523,6 @@ def _compile_bootstrapped_ks(planner: Any, cfg: ExpectationConfiguration) -> Non
     _pop_cache: dict[str, Any] = {}
 
     def _population(ctx, nonnull: int):
-        import json as _json
-
         if "global" not in _pop_cache:
             base = planner.df.filter(dom & col.isNotNull())
             if nonnull > sample_cap:
@@ -553,19 +544,13 @@ def _compile_bootstrapped_ks(planner: Any, cfg: ExpectationConfiguration) -> Non
             if planner.partition_by:
                 groups: dict[str, list] = {}
                 for r in rows:
-                    k = _json.dumps(
-                        {c: r[c] for c in planner.partition_by},
-                        sort_keys=True,
-                        default=str,
-                    )
-                    groups.setdefault(k, []).append(r["_v"])
+                    groups.setdefault(planner._row_pk(r), []).append(r["_v"])
                 _pop_cache["parts"] = {
                     k: np.sort(np.array(v, dtype=np.float64))
                     for k, v in groups.items()
                 }
-        if ctx.is_partition and ctx.partition_key is not None:
-            k = _json.dumps(ctx.partition_key, sort_keys=True, default=str)
-            vals = _pop_cache.get("parts", {}).get(k)
+        if ctx.pk is not None:
+            vals = _pop_cache.get("parts", {}).get(ctx.pk)
             if vals is None:
                 # a partition small enough to be missed by the uniform
                 # sample entirely — fetch its values directly (bounded);
@@ -578,7 +563,7 @@ def _compile_bootstrapped_ks(planner: Any, cfg: ExpectationConfiguration) -> Non
                     .collect()
                 )
                 vals = np.sort(np.array([r["_v"] for r in rows], dtype=np.float64))
-                _pop_cache.setdefault("parts", {})[k] = vals
+                _pop_cache.setdefault("parts", {})[ctx.pk] = vals
             return vals
         return _pop_cache["global"]
 

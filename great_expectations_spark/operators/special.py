@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 
 from great_expectations_spark.core.config import ExpectationConfiguration
 from great_expectations_spark.core.result import (
-    format_map_output,
+    map_verdict,
     validate_metric_value_between,
     validate_mostly,
 )
@@ -96,10 +96,7 @@ def _compile_exist_in(planner: Any, cfg: ExpectationConfiguration) -> None:
             state["global"] = violations.count()
             if planner.partition_by:
                 rows = violations.groupBy(*planner.partition_by).count().collect()
-                state["parts"] = {
-                    json.dumps({c: r[c] for c in planner.partition_by}, sort_keys=True, default=str): int(r["count"])
-                    for r in rows
-                }
+                state["parts"] = {planner._row_pk(r): int(r["count"]) for r in rows}
             if rf["result_format"] != "BOOLEAN_ONLY":
                 n = rf["partial_unexpected_count"]
                 if len(columns) == 1:
@@ -118,23 +115,20 @@ def _compile_exist_in(planner: Any, cfg: ExpectationConfiguration) -> None:
 
     def decide(ctx) -> tuple[bool, dict]:
         _compute()
-        if ctx.is_partition and ctx.partition_key is not None:
-            pk = json.dumps(ctx.partition_key, sort_keys=True, default=str)
-            unexpected = state.get("parts", {}).get(pk, 0)
+        if ctx.pk is not None:
+            unexpected = state.get("parts", {}).get(ctx.pk, 0)
             sample = None
         else:
             unexpected = state["global"]
             sample = state.get("sample")
-        elem = ctx.metrics[a_elem] or 0
-        nonnull = ctx.metrics[a_nonnull] or 0
-        if elem == 0 or nonnull == 0:
-            success = True
-        else:
-            success = ((nonnull - unexpected) / nonnull) >= mostly
-        out = format_map_output(
-            rf, bool(success), elem, nonnull, unexpected, unexpected_list=sample
+        return map_verdict(
+            rf,
+            mostly,
+            ctx.metrics[a_elem] or 0,
+            ctx.metrics[a_nonnull] or 0,
+            unexpected,
+            unexpected_list=sample,
         )
-        return bool(success), out.get("result", {"success": success})
 
     planner._add_item(cfg, decide, partition_capable=True)
 
@@ -284,21 +278,14 @@ def _compile_monotonic(planner: Any, cfg: ExpectationConfiguration, increasing: 
         nonnull, unexpected, sample = _monotonic_scan(
             base, column, order_by, increasing, strictly, cap
         )
-        elem = ctx.metrics[a_elem] or 0
-        success = (
-            True
-            if elem == 0 or nonnull == 0
-            else ((nonnull - unexpected) / nonnull) >= mostly
-        )
-        out = format_map_output(
+        return map_verdict(
             rf,
-            bool(success),
-            elem,
+            mostly,
+            ctx.metrics[a_elem] or 0,
             nonnull,
             unexpected,
             unexpected_list=sample if cap else None,
         )
-        return bool(success), out.get("result", {"success": success})
 
     planner._add_item(cfg, decide, partition_capable=False)
 
@@ -306,11 +293,15 @@ def _compile_monotonic(planner: Any, cfg: ExpectationConfiguration, increasing: 
 def _compile_z_scores(planner: Any, cfg: ExpectationConfiguration) -> None:
     """expect_column_value_z_scores_to_be_less_than.
 
-    The reference resolves mean and stddev as metrics before the z condition
-    (column_values_z_score.py:113-127). Here they are one scalar subquery of
-    the batch inside the main pass: Catalyst's MergeScalarSubqueries folds
-    the moments of every z-score in the suite into one aggregate, run once
-    and reused, so per-partition verdicts use the whole batch's moments.
+    A map expectation whose condition, |z| < threshold (z < threshold when
+    not double-sided), reads the batch's mean and stddev. The reference
+    resolves those as metrics before the condition
+    (column_values_z_score.py:113-127); here they are one scalar subquery of
+    the batch inside the main pass: Catalyst's MergeScalarSubqueries folds the
+    moments of every z-score in the suite into one aggregate, run once and
+    reused, so per-partition verdicts use the whole batch's moments. The
+    counts, samples and verdict are those of every map expectation
+    (SuitePlanner._map_decider); this compiler registers only the stddev.
 
     Deliberate divergence on degenerate domains (stddev undefined — fewer
     than two non-null values — or zero): this engine fails explicitly with
@@ -324,7 +315,6 @@ def _compile_z_scores(planner: Any, cfg: ExpectationConfiguration) -> None:
     column = kw["column"]
     threshold = float(kw["threshold"])
     double_sided = bool(kw.get("double_sided", True))
-    mostly = validate_mostly(kw.get("mostly"))
     dom, dom_id = planner._domain(cfg)
     col = F.col(column)
     mean = planner.df.select(F.avg(F.when(dom, col)).cast("double")).scalar()
@@ -333,18 +323,11 @@ def _compile_z_scores(planner: Any, cfg: ExpectationConfiguration) -> None:
     # a domain is decided as degenerate below
     z = F.try_divide(col - mean, std)
     expected = (F.abs(z) < threshold) if double_sided else (z < threshold)
-    mc = MapCondition(expected=expected, considered=col.isNotNull(), value_expr=col)
-    unexpected_cond = dom & mc.unexpected
-    a_unexp = planner._reg(
-        ("z_unexpected", dom_id, cfg.id), F.count(F.when(unexpected_cond, F.lit(1)))
+    mc = MapCondition(
+        expected=expected, considered=col.isNotNull(), value_expr=col, columns=[column]
     )
     a_std = planner._reg(("z_stddev", dom_id, column), F.max(std))
-    a_elem = planner._reg(("element_count", dom_id), F.count(F.when(dom, F.lit(1))))
-    a_nonnull = planner._reg(("nonnull", dom_id, column), F.count(F.when(dom, col)))
-    eid = cfg.id
-    rf = planner.rf
-    if rf["result_format"] != "BOOLEAN_ONLY":
-        planner._sample_specs.append((eid, unexpected_cond, col, column, a_unexp))
+    map_decide = planner._map_decider(cfg, mc)
 
     def decide(ctx) -> tuple[bool, dict]:
         if not ctx.metrics[a_std]:
@@ -352,23 +335,7 @@ def _compile_z_scores(planner: Any, cfg: ExpectationConfiguration) -> None:
                 "observed_value": None,
                 "details": {"error": "stddev is zero or undefined"},
             }
-        elem = ctx.metrics[a_elem] or 0
-        nonnull = ctx.metrics[a_nonnull] or 0
-        unexpected = ctx.metrics[a_unexp] or 0
-        success = (
-            True
-            if elem == 0 or nonnull == 0
-            else ((nonnull - unexpected) / nonnull) >= mostly
-        )
-        out = format_map_output(
-            rf,
-            bool(success),
-            elem,
-            nonnull,
-            unexpected,
-            unexpected_list=ctx.sample_values.get(eid),
-        )
-        return bool(success), out.get("result", {"success": success})
+        return map_decide(ctx)
 
     planner._add_item(cfg, decide, partition_capable=True)
 

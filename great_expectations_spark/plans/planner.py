@@ -51,7 +51,6 @@ from __future__ import annotations
 
 import functools
 import json
-import math
 import re
 from dataclasses import dataclass, field
 from typing import Any, Callable, Optional
@@ -69,7 +68,7 @@ from great_expectations_spark.core.config import (
 from great_expectations_spark.core.result import (
     ExpectationValidationResult,
     SuiteValidationResult,
-    format_map_output,
+    map_verdict,
     parse_result_format,
     suite_statistics,
     validate_mostly,
@@ -78,6 +77,7 @@ from great_expectations_spark.operators import drift, images, schema_checks, spe
 from great_expectations_spark.operators.aggregates import AGG_BUILDERS
 from great_expectations_spark.operators.conditions import (
     _MAP_BUILDERS,
+    MapCondition,
     _ignore_row_if_considered,
     compile_map_condition,
     row_domain,
@@ -190,13 +190,31 @@ class _GroupByResult:
     top: list[tuple[tuple, int]] = field(default_factory=list)  # (values, count)
     dup_sample: list[tuple[tuple, int]] = field(default_factory=list)
     top_truncated: bool = False
-    # json(partition_key) -> rows in that partition whose value is a
+    # _pk(partition_key) -> rows in that partition whose value is a
     # (global) duplicate; populated when the suite has partition_by
     part_dup_rows: dict = field(default_factory=dict)
-    # json(partition_key) -> partition-local value counts (want_partition_top)
+    # _pk(partition_key) -> partition-local value counts (want_partition_top)
     part_top: dict = field(default_factory=dict)  # pk -> list[(values, count)]
     part_top_truncated: dict = field(default_factory=dict)  # pk -> bool
     part_top_cap: int = DISTINCT_CAP  # effective per-partition top cap
+
+
+def _pk(partition_key: dict) -> str:
+    """The one serialization of a partition key that indexes per-partition
+    results collected during a run (ctx.pk, SuitePlanner._row_pk)."""
+    return json.dumps(partition_key, sort_keys=True, default=str)
+
+
+def _merge_partition(
+    rows: list[tuple[dict, dict]], index: dict[str, dict], pkey: dict, values: dict
+) -> None:
+    """Merge values into pkey's dict in rows, the (partition key, dict)
+    list whose dicts index maps by _pk, appending the entry if it is new."""
+    k = _pk(pkey)
+    if k not in index:
+        index[k] = {}
+        rows.append((pkey, index[k]))
+    index[k].update(values)
 
 
 class _Ctx:
@@ -210,15 +228,14 @@ class _Ctx:
         self.sample_rows: dict[str, list[dict]] = {}  # include_unexpected_rows
         self.is_partition: bool = False
         self.partition_key: Optional[dict] = None  # set for partition decisions
+        self.pk: Optional[str] = None  # _pk(partition_key), set with it
 
     def partition_top(self, gb: _GroupByResult) -> tuple[list, bool]:
-        """(top, truncated) — partition-local when deciding for a partition;
-        the single owner of the partition-key serialization used to index
-        groupBy tops. A top that is not truncated holds every value, so its
-        counts sum to the rows it was computed over."""
-        if self.is_partition and self.partition_key is not None:
-            pk = json.dumps(self.partition_key, sort_keys=True, default=str)
-            return gb.part_top.get(pk, []), gb.part_top_truncated.get(pk, False)
+        """(top, truncated) — partition-local when deciding for a partition.
+        A top that is not truncated holds every value, so its counts sum to
+        the rows it was computed over."""
+        if self.pk is not None:
+            return gb.part_top.get(self.pk, []), gb.part_top_truncated.get(self.pk, False)
         return gb.top, gb.top_truncated
 
 
@@ -254,7 +271,6 @@ class SuitePlanner:
         result_format: Any = "BASIC",
         partition_by: Optional[list[str]] = None,
         spark: Optional[SparkSession] = None,
-        complete_cap: int = COMPLETE_CAP,
         persist: bool = False,
         evaluation_parameters: Optional[dict[str, Any]] = None,
         urn_resolver: Optional[Callable[[str], Any]] = None,
@@ -283,7 +299,6 @@ class SuitePlanner:
         self.rf = parse_result_format(result_format)
         self.partition_by = list(partition_by or [])
         self.spark = spark or df.sparkSession
-        self.complete_cap = complete_cap
         self.persist = persist
 
         self._main_aggs: dict[str, Column] = {}
@@ -314,6 +329,10 @@ class SuitePlanner:
     ) -> None:
         """Queue one expectation's decider (run after every pass)."""
         self._items.append(_Item(cfg, decide, partition_capable))
+
+    def _row_pk(self, row: Any) -> str:
+        """_pk of a collected row's partition columns."""
+        return _pk({c: row[c] for c in self.partition_by})
 
     def _reg(self, key_parts: tuple, expr: Column, distinct: bool = False) -> str:
         """Metric-identity dedup: same key → same aggregate expression."""
@@ -483,9 +502,16 @@ class SuitePlanner:
                     f"Values passed to {cfg.expectation_type} must be of type string."
                 )
         mc = compile_map_condition(cfg.expectation_type, cfg.kwargs)
+        self._add_item(cfg, self._map_decider(cfg, mc), partition_capable=True)
+
+    def _map_decider(
+        self, cfg: ExpectationConfiguration, mc: MapCondition
+    ) -> Callable[[_Ctx], tuple[bool, dict]]:
+        """Register a map condition's element, considered and unexpected
+        counts and its sample spec; return its decider. Samples exist only
+        in the global context, so partition verdicts carry counts alone."""
         dom, dom_id = self._domain(cfg)
         mostly = validate_mostly(cfg.kwargs.get("mostly"))
-
         a_elem = self._reg(("element_count", dom_id), F.count(F.when(dom, F.lit(1))))
         a_cons = self._reg(
             ("considered", dom_id, cfg.expectation_type, str(cfg.success_kwargs))
@@ -497,45 +523,26 @@ class SuitePlanner:
         a_unexp = self._reg(
             ("unexpected", dom_id, cfg.id), F.count(F.when(unexpected_cond, F.lit(1)))
         )
-
         eid = cfg.id
-        cast_col = mc.sample_cast_column()
         if self.rf["result_format"] != "BOOLEAN_ONLY":
             self._sample_specs.append(
-                (eid, unexpected_cond, mc.value_expr, cast_col, a_unexp)
+                (eid, unexpected_cond, mc.value_expr, mc.sample_cast_column(), a_unexp)
             )
-        counts_nulls = mc.counts_nulls
-        extra_details = mc.extra_details
 
         def decide(ctx: _Ctx) -> tuple[bool, dict]:
-            elem = ctx.metrics[a_elem] or 0
-            considered = ctx.metrics[a_cons] or 0
-            unexpected = ctx.metrics[a_unexp] or 0
-            if elem == 0 or considered == 0:
-                success = True  # vacuous (reference expectation.py:2213-2215)
-            else:
-                success = ((considered - unexpected) / considered) >= mostly
-            out = format_map_output(
+            return map_verdict(
                 self.rf,
-                bool(success),
-                element_count=elem,
-                nonnull_count=elem if counts_nulls else considered,
-                unexpected_count=unexpected,
+                mostly,
+                ctx.metrics[a_elem] or 0,
+                ctx.metrics[a_cons] or 0,
+                ctx.metrics[a_unexp] or 0,
                 unexpected_list=ctx.sample_values.get(eid),
                 unexpected_rows=ctx.sample_rows.get(eid),
+                value_counts=ctx.sample_counts.get(eid),
+                details=mc.extra_details,
             )
-            result = out.get("result", {})
-            if not ctx.is_partition and eid in ctx.sample_counts:
-                counts = ctx.sample_counts[eid]
-                result["partial_unexpected_counts"] = [
-                    {"value": v, "count": c}
-                    for v, c in counts[: self.rf["partial_unexpected_count"]]
-                ]
-            if extra_details and self.rf["result_format"] != "BOOLEAN_ONLY":
-                result["details"] = {**result.get("details", {}), **extra_details}
-            return bool(success), result
 
-        self._add_item(cfg, decide, partition_capable=True)
+        return decide
 
     # ---- execution -------------------------------------------------------
 
@@ -659,6 +666,7 @@ class SuitePlanner:
                         pctx.groupby = ctx.groupby
                         pctx.is_partition = True
                         pctx.partition_key = pkey
+                        pctx.pk = _pk(pkey)
                         evr = self._decide(item, pctx)
                         evr.partition = pkey
                         partition_results.append(evr)
@@ -667,8 +675,6 @@ class SuitePlanner:
                 df.unpersist()
 
         results.extend(_exception_evr(cfg, err) for cfg, err in self._errors)
-
-        success = all(r.success for r in results)
         # resolved metrics keyed by their human-readable identity (the _reg
         # key parts), global + per partition — persisted by the stores layer
         # (reference: metric_store.py / StoreMetricsAction)
@@ -685,19 +691,28 @@ class SuitePlanner:
                 for pkey, pmetrics in partition_rows
             ],
         }
+        return self._suite_result(results, partition_results, out_metrics, meta)
+
+    def _suite_result(
+        self,
+        results: list[ExpectationValidationResult],
+        partition_results: list[ExpectationValidationResult],
+        metrics: dict,
+        meta: Optional[dict],
+    ) -> SuiteValidationResult:
         return SuiteValidationResult(
-            success=success,
+            success=all(r.success for r in results),
             results=results,
             statistics=suite_statistics(results),
             meta={"suite_name": self.suite.name, **(meta or {})},
             partition_results=partition_results,
-            metrics=out_metrics,
+            metrics=metrics,
         )
 
     def _run_bundles(self, df: DataFrame) -> tuple[dict, list[tuple[dict, dict]]]:
         global_metrics: dict[str, Any] = {}
         partition_rows: list[tuple[dict, dict]] = []  # (partition_key, metrics)
-        part_index: dict[str, dict] = {}  # json(pkey) -> metrics dict
+        part_index: dict[str, dict] = {}
         for exprs in (list(self._main_aggs.values()), list(self._distinct_aggs.values())):
             if not exprs:
                 continue
@@ -722,11 +737,7 @@ class SuitePlanner:
                     if g == gid:
                         global_metrics.update(d)
                     elif g == 0:
-                        k = json.dumps(pkey, sort_keys=True, default=str)
-                        if k not in part_index:
-                            part_index[k] = {}
-                            partition_rows.append((pkey, part_index[k]))
-                        part_index[k].update(d)
+                        _merge_partition(partition_rows, part_index, pkey, d)
             else:
                 global_metrics.update(df.agg(*exprs).collect()[0].asDict())
         return global_metrics, partition_rows
@@ -736,36 +747,38 @@ class SuitePlanner:
     ) -> SuiteValidationResult:
         """Fallback when a bundled pass fails: validate each expectation in
         its own single-expectation planner so only the offender carries the
-        exception (reference catch_exceptions semantics)."""
+        exception (reference catch_exceptions semantics). A sub-planner gets
+        the caller's frame and every setting of this one, so its EVR and its
+        metrics are those the expectation has in a suite that does not fail."""
         results: list[ExpectationValidationResult] = []
         partition_results: list[ExpectationValidationResult] = []
+        metrics: dict = {"global": {}, "partitions": []}
+        part_index: dict[str, dict] = {}
         if len(self.suite.expectations) <= 1:
             results.extend(
                 _exception_evr(cfg, bundle_error) for cfg in self.suite.expectations
             )
         else:
             for cfg in self.suite.expectations:
-                sub = SuitePlanner(
-                    self.df,
+                out = SuitePlanner(
+                    self._schema_df,
                     ExpectationSuite(name=self.suite.name, expectations=[cfg]),
                     result_format=self.rf,
                     partition_by=self.partition_by,
                     spark=self.spark,
-                    complete_cap=self.complete_cap,
+                    persist=self.persist,
                     evaluation_parameters=self.evaluation_parameters,
                     urn_resolver=self.urn_resolver,
-                )
-                out = sub.run()
+                    metrics_store=self.metrics_store,
+                    history_suite_name=self.history_suite_name,
+                    catch_exceptions=self.catch_exceptions,
+                ).run()
                 results.extend(out.results)
                 partition_results.extend(out.partition_results)
-        success = all(r.success for r in results)
-        return SuiteValidationResult(
-            success=success,
-            results=results,
-            statistics=suite_statistics(results),
-            meta={"suite_name": self.suite.name, **(meta or {})},
-            partition_results=partition_results,
-        )
+                metrics["global"].update(out.metrics["global"])
+                for pkey, pmetrics in out.metrics["partitions"]:
+                    _merge_partition(metrics["partitions"], part_index, pkey, pmetrics)
+        return self._suite_result(results, partition_results, metrics, meta)
 
     def _decide(self, item: _Item, ctx: _Ctx) -> ExpectationValidationResult:
         try:
@@ -891,11 +904,7 @@ class SuitePlanner:
                     .collect()
                 )
                 for r in prows:
-                    pk = json.dumps(
-                        {c: r[c] for c in self.partition_by},
-                        sort_keys=True,
-                        default=str,
-                    )
+                    pk = self._row_pk(r)
                     if int(r["_rk"]) > per_part_cap:
                         out.part_top_truncated[pk] = True
                         continue
@@ -926,10 +935,7 @@ class SuitePlanner:
                     .count()
                     .collect()
                 )
-                out.part_dup_rows = {
-                    json.dumps({c: r[c] for c in self.partition_by}, sort_keys=True, default=str): int(r["count"])
-                    for r in prows
-                }
+                out.part_dup_rows = {self._row_pk(r): int(r["count"]) for r in prows}
         finally:
             if n_products > 1:
                 grouped.unpersist()
@@ -953,7 +959,7 @@ class SuitePlanner:
             # full re-scan of the base df per failing expectation. The
             # per-expectation top-cap is a row_number over the (much smaller)
             # post-aggregation counts relation.
-            cap = partial_n if level == "SUMMARY" else self.complete_cap
+            cap = partial_n if level == "SUMMARY" else COMPLETE_CAP
             eids = [eid for eid, *_ in specs]
             entries = F.array(
                 *[
@@ -985,7 +991,7 @@ class SuitePlanner:
             for eid, counts in ctx.sample_counts.items():
                 counts.sort(key=lambda vc: (-vc[1], str(type(vc[0]).__name__), str(vc[0])))
                 expanded: list[Any] = []
-                limit = partial_n if level == "SUMMARY" else self.complete_cap
+                limit = partial_n if level == "SUMMARY" else COMPLETE_CAP
                 for v, c in counts:
                     if len(expanded) >= limit:
                         break
@@ -1154,39 +1160,23 @@ def _compile_unique_map(planner: SuitePlanner, cfg: ExpectationConfiguration) ->
 
     def decide(ctx: _Ctx) -> tuple[bool, dict]:
         gb = ctx.groupby[key]
-        elem = ctx.metrics.get(a_elem, 0) or 0
-        considered = ctx.metrics[a_cons] or 0
-        if ctx.is_partition and ctx.partition_key is not None:
+        sample = details = None
+        if ctx.pk is not None:
             # per-partition verdict: rows of THIS partition whose value is a
             # global duplicate
-            pk = json.dumps(ctx.partition_key, sort_keys=True, default=str)
-            unexpected = gb.part_dup_rows.get(pk, 0)
+            unexpected = gb.part_dup_rows.get(ctx.pk, 0)
         else:
             unexpected = gb.dup_row_count
-        if elem == 0 or considered == 0:
-            success = True
-        else:
-            success = ((considered - unexpected) / considered) >= mostly
-        sample: list[Any] = []
-        limit = rf["partial_unexpected_count"]
-        for values, cnt in gb.dup_sample:
-            if len(sample) >= limit:
-                break
-            v = values[0] if len(values) == 1 else json.dumps(list(values), default=str)
-            sample.extend([v] * min(cnt, limit - len(sample)))
-        out = format_map_output(
-            rf,
-            bool(success),
-            element_count=elem,
-            nonnull_count=considered,
-            unexpected_count=unexpected,
-            unexpected_list=sample if not ctx.is_partition else None,
-        )
-        result = out.get("result", {})
-        if not ctx.is_partition:
+            sample = []
+            limit = rf["partial_unexpected_count"]
+            for values, cnt in gb.dup_sample:
+                if len(sample) >= limit:
+                    break
+                v = values[0] if len(values) == 1 else json.dumps(list(values), default=str)
+                sample.extend([v] * min(cnt, limit - len(sample)))
             approx = ctx.metrics.get(a_approx)
             exact = gb.distinct_count
-            result["details"] = {
+            details = {
                 "duplicate_value_count": gb.dup_value_count,
                 "distinct_count_exact": exact,
                 "distinct_count_approx": int(approx) if approx is not None else None,
@@ -1196,7 +1186,15 @@ def _compile_unique_map(planner: SuitePlanner, cfg: ExpectationConfiguration) ->
                     else None
                 ),
             }
-        return bool(success), result
+        return map_verdict(
+            rf,
+            mostly,
+            ctx.metrics.get(a_elem, 0) or 0,
+            ctx.metrics[a_cons] or 0,
+            unexpected,
+            unexpected_list=sample,
+            details=details,
+        )
 
     planner._add_item(cfg, decide, partition_capable=True)
 

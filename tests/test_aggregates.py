@@ -184,6 +184,29 @@ def test_zscore(spark):
     assert evr.result["partial_unexpected_list"] == [100.0]
 
 
+def test_zscore_reports_like_every_map_expectation(spark):
+    # an outlier that occurs 30 times: SUMMARY counts it exactly, as the
+    # between check on the same column does (not the 20 copies of its capped
+    # sample), and include_unexpected_rows returns its rows
+    df = spark.createDataFrame(
+        [(i, float(i % 50)) for i in range(2000)]
+        + [(2000 + j, 1000.0) for j in range(30)],
+        ["id", "v"],
+    )
+    suite = ExpectationSuite("z")
+    suite.add("expect_column_value_z_scores_to_be_less_than", column="v", threshold=3.0)
+    suite.add("expect_column_values_to_be_between", column="v", min_value=0, max_value=49)
+    z, between = validate(df, suite, result_format="SUMMARY").results
+    assert z.result["partial_unexpected_counts"] == [{"value": 1000.0, "count": 30}]
+    assert z.result["partial_unexpected_counts"] == between.result["partial_unexpected_counts"]
+
+    rf = {"result_format": "SUMMARY", "include_unexpected_rows": True}
+    z, between = validate(df, suite, result_format=rf).results
+    rows = z.result["unexpected_rows"]
+    assert len(rows) == 20 and all(r["v"] == 1000.0 and r["id"] >= 2000 for r in rows)
+    assert len(between.result["unexpected_rows"]) == 20
+
+
 def test_zscore_degenerate_domains(spark):
     """stddev zero (constant column) or undefined (fewer than two non-null
     values) -> explicit failure with details.error and observed_value None.

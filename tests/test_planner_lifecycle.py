@@ -210,8 +210,15 @@ def test_caller_cached_image_frame_not_released(spark):
 def test_isolation_fallback_releases_every_cache(spark, monkeypatch, persist_calls):
     # avg() over a string column fails the bundled pass; the fallback's
     # single-expectation planners cache what they read of the image input
-    # themselves, and every cache made during the call is gone at its end
+    # themselves, and every cache made during the call is gone at its end.
+    # Each sub-planner validates the caller's frame, so every other EVR,
+    # the schema check's included, is the one the suite gives without the
+    # broken expectation (the planner's own decode column is not listed)
+    eng = SparkValidationEngine(spark)
+    df = _images(spark)
     suite = image_suite()
+    suite.add("expect_table_columns_to_match_ordered_list", column_list=df.columns)
+    clean = canonical(eng.validate(df, suite, result_format="SUMMARY"))
     suite.add("expect_column_mean_to_be_between", column="caption", min_value=0, max_value=1)
     fallbacks = []
     run_isolated = planner_mod.SuitePlanner._run_isolated
@@ -221,18 +228,54 @@ def test_isolation_fallback_releases_every_cache(spark, monkeypatch, persist_cal
         return run_isolated(self, *args, **kwargs)
 
     monkeypatch.setattr(planner_mod.SuitePlanner, "_run_isolated", spy)
-    df = _images(spark)
     mark = _rdd_mark(spark)
-    res = SparkValidationEngine(spark).validate(df, suite, result_format="SUMMARY")
+    res = eng.validate(df, suite, result_format="SUMMARY")
     # the run's fallback and the broken expectation's own planner's one
     assert fallbacks == [len(suite.expectations), 1]
     assert [r.expectation_config["expectation_type"] for r in _raised(res)] == [
         "expect_column_mean_to_be_between"
     ]
     assert len(res.results) == len(suite.expectations)
+    got = canonical(res)
+    assert {k: got[k] for k in clean} == clean
     assert persist_calls
     assert all(d.storageLevel == StorageLevel.NONE for d in persist_calls)
     assert _cached(spark, df, mark) == (0, False)
+
+
+def test_isolation_fallback_keeps_every_setting(spark, tmp_path):
+    # the fallback's sub-planners read the metrics history the clean run
+    # reads, so an auto=True bound comes from the stored runs (not a point
+    # bound on this batch), and its result carries the metrics a store
+    # writes
+    from great_expectations_spark.sources.stores import ResultsStore
+
+    eng = SparkValidationEngine(spark)
+    store = ResultsStore(spark, str(tmp_path / "store"))
+    history = ExpectationSuite("isolated_auto")
+    history.add("expect_column_mean_to_be_between", column="v", min_value=0, max_value=1e9)
+    history.add("expect_table_row_count_to_be_between", min_value=0, max_value=10**9)
+    batch = spark.range(100).select((F.lit(19.0) + F.col("id") % 3).alias("v"))
+    for i in range(3):
+        store.write_metrics(eng.validate(batch, history), run_id=f"r{i}")
+
+    today = spark.range(120).select(
+        (F.lit(24.0) + F.col("id") % 3).alias("v"), F.lit("s").alias("s")
+    )
+    suite = ExpectationSuite("isolated_auto")
+    suite.add("expect_column_mean_to_be_between", column="v", auto=True)
+    suite.add("expect_table_row_count_to_be_between", auto=True)
+    suite.add("expect_column_values_to_not_be_null", column="v")
+    clean = eng.validate(today, suite, metrics_store=store)
+    # the history's bounds (mean 19.99, 100 rows) fail this batch
+    mean_kw, rows_kw = (r.expectation_config["kwargs"] for r in clean.results[:2])
+    assert mean_kw["max_value"] < 20 and rows_kw["max_value"] == 100
+    assert not clean.results[0].success and not clean.results[1].success
+    suite.add("expect_column_mean_to_be_between", column="s", min_value=0, max_value=1)
+    res = eng.validate(today, suite, metrics_store=store)
+    assert len(_raised(res)) == 1
+    assert canonical(res).items() >= canonical(clean).items()
+    assert res.metrics["global"] == clean.metrics["global"]
 
 
 @F.pandas_udf(T.LongType())
@@ -295,8 +338,12 @@ def test_no_persist_without_a_repeated_python_scan(spark, lineitem, persist_call
     assert persist_calls == []
 
 
-@pytest.mark.parametrize("partition_by, jobs", [(None, 14), (["l_linestatus"], 20)])
-def test_job_budget(spark, lineitem, partition_by, jobs, persist_calls):
+@pytest.mark.parametrize(
+    "partition_by, broken, jobs",
+    [(None, False, 14), (["l_linestatus"], False, 20), (None, True, 26), (["l_linestatus"], True, 36)],
+    ids=["None-14", "partition_by1-20", "None-broken-26", "partition_by1-broken-36"],
+)
+def test_job_budget(spark, lineitem, partition_by, broken, jobs, persist_calls):
     suite = ExpectationSuite("budget")
     suite.add("expect_column_values_to_be_between", column="l_quantity", min_value=1, max_value=45)
     suite.add("expect_column_values_to_be_unique", column="l_orderkey")
@@ -313,6 +360,9 @@ def test_job_budget(spark, lineitem, partition_by, jobs, persist_calls):
         threshold=0.1,
     )
     suite.add("expect_table_columns_to_match_set", column_set=list(lineitem.columns))
+    if broken:
+        # avg() over a string column fails the bundle: the isolation fallback
+        suite.add("expect_column_mean_to_be_between", column="l_returnflag", min_value=0, max_value=1)
     eng = SparkValidationEngine(spark)
     n = _job_count(
         spark,

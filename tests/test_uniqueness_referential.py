@@ -109,6 +109,27 @@ def test_referential_fk_testdata(lineitem, orders):
     assert evr.success is True
 
 
+def test_boolean_only_map_results_are_empty(spark):
+    # every map-shaped verdict carries its success alone at BOOLEAN_ONLY
+    # (reference _format_map_output), global and per partition
+    df = spark.createDataFrame(
+        [(i, float(i % 10), i % 3) for i in range(30)] + [(30, 500.0, 1), (30, 1.0, 2)],
+        ["id", "v", "k"],
+    )
+    ref = spark.createDataFrame([(0,), (1,)], ["k"])
+    suite = ExpectationSuite("boolean_only")
+    suite.add("expect_column_values_to_be_between", column="v", min_value=0, max_value=8)
+    suite.add("expect_column_values_to_be_unique", column="id")
+    suite.add("expect_column_values_to_exist_in", column="k", ref=ref)
+    suite.add("expect_column_values_to_be_increasing", column="v", order_by="id")
+    suite.add("expect_column_value_z_scores_to_be_less_than", column="v", threshold=3.0)
+    res = validate(df, suite, result_format="BOOLEAN_ONLY", partition_by=["k"])
+    assert [r.success for r in res.results] == [False] * 5
+    assert [r.result for r in res.results] == [{}] * 5
+    assert res.partition_results
+    assert all(r.result == {} for r in res.partition_results)
+
+
 def test_increasing(spark):
     df = spark.createDataFrame(
         [(1, 10.0), (2, 20.0), (3, 15.0), (4, 30.0)], ["seq", "v"]
